@@ -1,7 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query on
@@ -117,6 +119,21 @@ object Bench {
 
   private def r3(d: Double): Double = math.rint(d * 1000) / 1000
 
+  /** Rep hygiene between timed runs, shared by this bench,
+    * [[graft.tools.BenchAdjudicate]] and [[graft.tools.Profile]]: drop
+    * cached frames, reclaim the pipeline family's temp warehouses and
+    * flush the writeback left behind (deleting un-synced scratch
+    * cancels it, so it cannot ambush the next rep mid-flight), then
+    * optionally collect dead blocks and finished-query garbage. */
+  private[graft] def repHygiene(spark: SparkSession, gc: Boolean = true)
+      : Unit = {
+    spark.catalog.clearCache()
+    registry.PipelineQueries.clearScratch(spark)
+    try { new ProcessBuilder("sync").start().waitFor(); () }
+    catch { case _: Exception => () }
+    if (gc) System.gc()
+  }
+
   /** 1-minute load average from /proc/loadavg (-1 if unreadable, e.g.
     * non-Linux). Sampled BEFORE the session spins up, this is ambient
     * machine load; sampled mid-run it includes the bench's own
@@ -212,36 +229,39 @@ object Bench {
     * reader must not guess at. */
   val ArtifactSchema = 2
 
-  /** Per-query mins from a previous bench artifact: the "qmin" field,
-    * falling back to "spread" minima ([lo,med,hi]) for artifacts
-    * written before qmin existed. Empty if the file is absent or
-    * unparsable — the compare is then skipped, never fatal. */
-  def priorMins(path: String): Map[String, Double] =
+  /** A previous artifact's JSON root: None if the file is absent or
+    * unparsable (the compare is then skipped, never fatal) or declares
+    * a newer schema than [[ArtifactSchema]]. */
+  private def priorArtifact(path: String): Option[JsonNode] =
     try {
-      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+      val root = new ObjectMapper().readTree(new java.io.File(path))
       val schema = Option(root.get("schema")).map(_.asInt(0))
       if (schema.exists(_ > ArtifactSchema)) {
         System.err.println(s"BENCH: prior artifact $path declares " +
           s"schema ${schema.get} > $ArtifactSchema - skipping the " +
           "regression compare rather than misreading it")
-        return Map.empty
-      }
-      def fields(n: com.fasterxml.jackson.databind.JsonNode):
-          Iterator[java.util.Map.Entry[String, com.fasterxml.jackson.databind.JsonNode]] =
-        if (n == null || !n.isObject) Iterator.empty
-        else scala.jdk.CollectionConverters.IteratorHasAsScala(n.fields()).asScala
+        None
+      } else Some(root)
+    } catch { case NonFatal(_) => None }
+
+  /** An artifact object's fields (none unless `n` is an object). */
+  private def fields(n: JsonNode): Iterator[(String, JsonNode)] =
+    if (n == null || !n.isObject) Iterator.empty
+    else n.fields().asScala.map(e => e.getKey -> e.getValue)
+
+  /** Per-query mins from a previous bench artifact: the "qmin" field,
+    * falling back to "spread" minima ([lo,med,hi]) for artifacts
+    * written before qmin existed. */
+  def priorMins(path: String): Map[String, Double] =
+    priorArtifact(path).fold(Map.empty[String, Double]) { root =>
       val qmin = fields(root.get("qmin"))
-        .map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap
+        .map { case (k, v) => k -> v.asDouble(-1.0) }.toMap
       if (qmin.nonEmpty) qmin
-      else fields(root.get("spread")).flatMap { e =>
-        val arr = e.getValue
-        if (arr.isArray && arr.size() >= 1)
-          Some(e.getKey -> arr.get(0).asDouble(-1.0))
-        else None
+      else fields(root.get("spread")).collect {
+        case (k, arr) if arr.isArray && arr.size() >= 1 =>
+          k -> arr.get(0).asDouble(-1.0)
       }.toMap
-    } catch { case NonFatal(_) => Map.empty }
+    }
 
   /** Per-query MEDIANS from a previous artifact (the "queries" field)
     * — the regression statistic at reps < 3, where a "min" is just
@@ -250,22 +270,12 @@ object Bench {
     * artifact). Same schema guard and failure tolerance as
     * [[priorMins]]. */
   def priorMedians(path: String): Map[String, Double] =
-    try {
-      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      val schema = Option(root.get("schema")).map(_.asInt(0))
-      if (schema.exists(_ > ArtifactSchema)) return Map.empty
-      if (root.get("queries") == null || !root.get("queries").isObject)
-        Map.empty
-      else scala.jdk.CollectionConverters
-        .IteratorHasAsScala(root.get("queries").fields()).asScala
-        .map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap
-    } catch { case NonFatal(_) => Map.empty }
+    priorArtifact(path).fold(Map.empty[String, Double])(root =>
+      fields(root.get("queries"))
+        .map { case (k, v) => k -> v.asDouble(-1.0) }.toMap)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val pipeReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_PIPE_REPS", "7")
       .toInt.max(1)
@@ -301,22 +311,7 @@ object Bench {
     val loadSamples =
       scala.collection.mutable.LinkedHashMap("pre_session" -> loadStart)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // the default codegen class cache holds 100 entries — BELOW the
-      // registered query count, so interleaved reps would recompile
-      // every generated stage on every rep (measured: +0.3-2s on
-      // codegen-heavy queries). A long-lived session serving a hundred
-      // distinct queries should size this cache accordingly; the bench
-      // then measures steady-state plans, not Janino compile time.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.create()
 
     // warm-up: session, codegen, file listing
     Tables.load(spark, sfDir, "lineitem").count()
@@ -424,10 +419,6 @@ object Bench {
       }
     }
 
-    def syncFs(): Unit =
-      try { new ProcessBuilder("sync").start().waitFor(); () }
-      catch { case _: Exception => () }
-
     // Pre-build the session-staged artifacts (LSH/jaccard pair tables,
     // IVF/PQ/int8 indexes, trained BPE) with ONE untimed touch of a
     // consumer per family BEFORE the first gated block: a first-use
@@ -453,8 +444,8 @@ object Bench {
       catch { case NonFatal(_) => () } // a real failure re-surfaces timed
       finally spark.catalog.clearCache()
     }
-    syncFs() // flush staging writeback outside the gated windows
-    if (gcBetween) System.gc()
+    // flush the staging writeback outside the gated windows
+    repHygiene(spark, gcBetween)
 
     for (rep <- 1 to reps) {
       // deterministic per-rep shuffle: every query gets a different
@@ -470,7 +461,7 @@ object Bench {
     // with the max landing wherever writeback did). Flush ONCE before
     // the pass and after each rep so every rep starts with a clean
     // writeback queue.
-    syncFs()
+    repHygiene(spark, gcBetween)
     // one UNTIMED warm-up rep: the pipeline family's code paths
     // (gates, clean, model, load, log sinks) first run here, so their
     // JIT/codegen warm-up and the first big post-steady-pass GC land
@@ -480,22 +471,14 @@ object Bench {
       catch { case NonFatal(_) => () } // a real failure re-surfaces timed
       finally spark.catalog.clearCache()
     }
-    registry.PipelineQueries.clearScratch(spark)
-    syncFs()
-    if (gcBetween) System.gc()
+    repHygiene(spark, gcBetween)
     for (rep <- 1 to pipeReps) {
       val order = new scala.util.Random(0x51ED2701L * rep).shuffle(pipeNames)
-      gatedBlock(s"pipe_rep$rep", order, () => {
-        registry.PipelineQueries.clearScratch(spark)
-        syncFs()
-        if (gcBetween) System.gc()
-      })
+      gatedBlock(s"pipe_rep$rep", order, () => repHygiene(spark, gcBetween))
       // reclaim this rep's temp warehouses: bounds scratch to one
       // rep's worth and cancels its pending writeback. Outside the
       // ambient window on purpose (see gatedBlock)
-      registry.PipelineQueries.clearScratch(spark)
-      syncFs()
-      if (gcBetween) System.gc()
+      repHygiene(spark, gcBetween)
       loadSamples(s"post_pipe_rep$rep") = loadavg()
     }
 
@@ -530,13 +513,11 @@ object Bench {
     // only reclaimed after the referencing frames are GC'd — without
     // the collection the blocks pile up and the probe slows ~2.5x PER
     // RUN (r10 measured sums [4.5, 15.0, 37.5] on a clean machine;
-    // with GC, StageTime measures [4.7, 4.3, 4.3]). The curation
+    // with GC, the same probe measured [4.7, 4.3, 4.3]). The curation
     // probe loop below always collected; this one now matches.
     try { registry.PipelineQueries.salesStageSeconds(spark, sfDir); () }
     catch { case NonFatal(_) => () }
-    registry.PipelineQueries.clearScratch(spark)
-    syncFs()
-    if (gcBetween) System.gc()
+    repHygiene(spark, gcBetween)
     val stageRuns: Seq[Seq[(String, Double, graft.tools.TaskSnap)]] =
       (1 to stageReps).flatMap { _ =>
         val run =
@@ -549,9 +530,7 @@ object Bench {
             System.err.println(s"stage probe failed: ${e.getMessage}")
             None
           }
-        registry.PipelineQueries.clearScratch(spark)
-        syncFs()
-        if (gcBetween) System.gc()
+        repHygiene(spark, gcBetween)
         run
       }
     def medBy(runs: Seq[Seq[(String, Double, graft.tools.TaskSnap)]],
@@ -585,25 +564,20 @@ object Bench {
       } catch { case NonFatal(e) =>
         System.err.println(s"fused tally run failed: ${e.getMessage}")
         None
-      } finally {
-        registry.PipelineQueries.clearScratch(spark)
-        spark.catalog.clearCache()
-        if (gcBetween) System.gc()
-      }
+      } finally repHygiene(spark, gcBetween)
 
     // per-stage attribution for the LLM-side composed flagship
     // (corpus_curation_v2), same 3-run median discipline + tally
     val curRuns: Seq[Seq[(String, Double, graft.tools.TaskSnap)]] =
       (1 to stageReps).flatMap { _ =>
         val run =
-          try Some(registry.ExtQueries.curationV2StageMetrics(spark, sfDir,
+          try Some(registry.QueryShared.curationV2StageMetrics(spark, sfDir,
             Some(stageTally)))
           catch { case NonFatal(e) =>
             System.err.println(s"curation stage probe failed: ${e.getMessage}")
             None
           }
-        spark.catalog.clearCache()
-        if (gcBetween) System.gc()
+        repHygiene(spark, gcBetween)
         run
       }
     val curStages: Seq[(String, Double)] = medBy(curRuns, _._2)

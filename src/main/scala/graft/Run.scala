@@ -62,7 +62,8 @@ object Run {
     * input / inactive pipeline / gate failure) — separate from main so
     * specs can drive the full CLI path in-process. */
   def run(argv: Seq[String],
-          sessionBuilder: () => SparkSession = defaultSession _): Int =
+          sessionBuilder: () => SparkSession =
+            () => Session.create("WARN")): Int =
     parse(argv) match {
       case None | Some(Args(None, _, _, _, _)) =>
         System.err.println("Incorrect user input provided.")
@@ -130,14 +131,4 @@ object Run {
         1
     }
   }
-
-  private def defaultSession(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 }

@@ -27,17 +27,6 @@ object Dedup {
     df.groupBy(TextOps.contentFingerprint(text).as("content_md5"))
       .agg(min(id).as("doc_id_kept"), count(lit(1)).as("n_copies"))
 
-  /** Exact dedup: keep the min-id row per distinct content. min_by
-    * aggregate, not a window — map-side combine instead of sorting
-    * every partition by (digest, id) twice (see
-    * [[graft.ops.Clean.dedupKeepFirst]]). */
-  def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val payload = struct(df.columns.map(col): _*)
-    df.groupBy(TextOps.contentFingerprint(col(textCol)).as("_graft_md5"))
-      .agg(min_by(payload, struct(col(idCol))).as("_graft_row"))
-      .select(df.columns.map(c => col(s"_graft_row.$c").as(c)): _*)
-  }
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ext.Dedup")
 
   /** Distinct whitespace tokens per document. Returns (doc_id, token). */
@@ -489,9 +478,9 @@ object Dedup {
     * logged at execution via [[GuardLog]] — recall-only and loud,
     * inert on well-behaved corpora (measured sf1 occupancy tops out
     * at 18 rows across the registered configs vs the 1024 default;
-    * `tools/BucketProbe`). The result is MATERIALIZED: both sides of
-    * the candidate self-join read it, and the observe node must
-    * execute exactly once. */
+    * SCALE.md, measured with a since-deleted bucket probe). The
+    * result is MATERIALIZED: both sides of the candidate self-join
+    * read it, and the observe node must execute exactly once. */
   private def cappedBandBuckets(long: DataFrame, maxBucket: Long,
                                 guardName: String): DataFrame = {
     GuardLog.ensure(long.sparkSession)

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * replicated once per salt value. Semantics are identical to the
   * plain equi-join.
   *
-  * WHEN TO USE — measured, not assumed (tools/SkewProbe, 40M-row fact
-  * with one key carrying 30%/60% of rows joined to a 1M-row dim,
-  * broadcast off, local[32]): AQE's runtime skew split beat this salt
+  * WHEN TO USE — measured, not assumed (a since-deleted skew probe,
+  * 40M-row fact with one key carrying 30%/60% of rows joined to a
+  * 1M-row dim, broadcast off, local[32]): AQE's runtime skew split beat this salt
   * 2.4–4.9x (medians: AQE split 2.6–2.8 s; salted 6.8–12.4 s; plain
   * with skew-split disabled 6.6–11.4 s). The salt pays for dim
   * replication (saltFactor x the dim shuffle) on EVERY key while AQE

@@ -83,11 +83,6 @@ object Clean {
       .select(df.columns.map(c => col(s"_graft_row.$c").as(c)): _*)
   }
 
-  /** D2 with the implicit file-order ordinal: attach ordinal, dedup,
-    * drop ordinal. */
-  def dedupKeepFirstFileOrder(df: DataFrame, pk: Seq[String]): DataFrame =
-    dedupKeepFirst(withOrdinal(df), pk, col(OrdinalCol)).drop(OrdinalCol)
-
   /** P5: cast every declared column to its declared type
     * (etl/transform_data_cleaning.py:122-140 — implementing the declared
     * semantics, not the reference's no-op bug; ANSI mode makes a failed

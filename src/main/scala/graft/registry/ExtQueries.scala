@@ -1,12 +1,5 @@
 package graft.registry
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.Tables
-import graft.ext.{AsOfJoin, Audio, Corpus, Dedup, Graph, Multimodal, Packing, RangeJoin, Sampling, Similarity, Sketches, TextOps, Video, Windows}
-
-
 /** The LLM-data-pipeline extension surface: dedup, similarity search,
   * text analysis, multimodal plumbing, event-time windowing. Oracle SQL
   * is provided wherever DuckDB can express the operator with provably
@@ -21,21 +14,6 @@ import graft.ext.{AsOfJoin, Audio, Corpus, Dedup, Graph, Multimodal, Packing, Ra
 object ExtQueries {
 
   type Q = QueryShared.Q
-
-  // Bench / spec API, unchanged home (delegates to the shared
-  // curation-v2 chain)
-  private[graft] def curationV2Docs(s: SparkSession, dir: String): DataFrame =
-    QueryShared.curationV2Docs(s, dir)
-  private[graft] def curationV2Stages(s: SparkSession, dir: String)
-      : Seq[(String, DataFrame => DataFrame)] =
-    QueryShared.curationV2Stages(s, dir)
-  def curationV2StageSeconds(s: SparkSession, dir: String)
-      : Seq[(String, Double)] =
-    QueryShared.curationV2StageSeconds(s, dir)
-  def curationV2StageMetrics(s: SparkSession, dir: String,
-                             tally: Option[graft.tools.TaskTally])
-      : Seq[(String, Double, graft.tools.TaskSnap)] =
-    QueryShared.curationV2StageMetrics(s, dir, tally)
 
   val queries: Map[String, Q] =
     ExtQueriesText.queries ++

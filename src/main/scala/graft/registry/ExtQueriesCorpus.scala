@@ -383,7 +383,7 @@ object ExtQueriesCorpus {
     // per-source token-budget selection, fused into ONE plan under one
     // composed oracle — the full selection path from raw corpus to
     // budgeted training set. Per-stage wall attribution comes from
-    // curationV2StageSeconds in the bench.
+    // curationV2StageMetrics in the bench.
     "corpus_curation_v2" -> ((s, dir) =>
       curationV2Stages(s, dir).foldLeft(curationV2Docs(s, dir)) {
         case (df, (_, stage)) => stage(df)

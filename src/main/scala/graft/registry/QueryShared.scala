@@ -165,21 +165,16 @@ object QueryShared {
 
   /** Per-stage wall seconds for the v2 curation chain: each stage runs
     * against the MATERIALIZED previous output, so a stage's number is
-    * its own work, not a recompute of everything before it. */
-  def curationV2StageSeconds(s: SparkSession, dir: String)
-      : Seq[(String, Double)] =
-    curationV2StageMetrics(s, dir, None).map { case (n, w, _) => n -> w }
-
-  /** [[curationV2StageSeconds]] plus task-metric attribution: when a
-    * [[graft.tools.TaskTally]] is supplied, each stage is bracketed
-    * with quiesced cumulative snapshots (the stages run sequentially,
-    * so the delta is exactly that stage's tasks) — per-stage cpu/task
-    * seconds and bytes, the statistics a loaded machine cannot
-    * stretch the way it stretches wall clocks. */
+    * its own work, not a recompute of everything before it. When a
+    * [[graft.tools.TaskTally]] is supplied, each stage is also
+    * bracketed with quiesced cumulative snapshots (the stages run
+    * sequentially, so the delta is exactly that stage's tasks) —
+    * per-stage cpu/task seconds and bytes, the statistics a loaded
+    * machine cannot stretch the way it stretches wall clocks. */
   def curationV2StageMetrics(s: SparkSession, dir: String,
                              tally: Option[graft.tools.TaskTally])
       : Seq[(String, Double, graft.tools.TaskSnap)] = {
-    val zero = graft.tools.TaskSnap(0, 0, 0, 0, 0)
+    val zero = graft.tools.TaskSnap.Zero
     var cur = curationV2Docs(s, dir)
     curationV2Stages(s, dir).map { case (name, f) =>
       val pre = tally.map { t => t.quiesce(60); t.snap() }.getOrElse(zero)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Artifact-store garbage collection — the ops companion of the r18
   * persistent store: artifacts are keyed by (builder version, corpus
   * snapshot fingerprint, params) and never expire on their own, so
@@ -19,12 +17,8 @@ import org.apache.spark.sql.SparkSession
 object ArtifactGC {
   def main(args: Array[String]): Unit = {
     val days = if (args.length > 0) args(0).toDouble else 14.0
-    val spark0 = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (args.length > 1)
-      spark0.config("spark.graft.artifactRoot", args(1))
-    else spark0).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
+    if (args.length > 1) spark.conf.set("spark.graft.artifactRoot", args(1))
     val before = graft.ext.ArtifactStore.manifest(spark).collect()
     println(s"[gc] ${before.length} artifact(s) under " +
       graft.ext.ArtifactStore.root(spark))

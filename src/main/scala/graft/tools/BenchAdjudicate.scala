@@ -2,7 +2,6 @@ package graft.tools
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
 
 /** Automated bench-flag adjudication (VERDICT r17 #4): three rounds
   * running, every close-out bench on this box carried env_suspect (an
@@ -16,11 +15,13 @@ import org.apache.spark.sql.SparkSession
   * For every query whose min regressed past `threshold`x the previous
   * artifact's min (the same statistic + 0.2s absolute floor
   * [[graft.Bench.regressions]] flags), it re-probes the query SAME-
-  * BOOT with TimeQuery's rep hygiene and compares the fresh probe
-  * median against the last COMMITTED median (the r14/r17 precedent):
+  * BOOT with the bench's rep hygiene ([[graft.Bench.repHygiene]]),
+  * timing `.count()` like the Bench medians it is compared against,
+  * and compares the fresh probe median against the last COMMITTED
+  * median (the r14/r17 precedent):
   *
   * Probe medians and committed medians come from DIFFERENT boots and
-  * different JIT contexts (an isolated TimeQuery probe never reaches
+  * different JIT contexts (an isolated single-query probe never reaches
   * the steady state a 280-query Bench run drives the JIT to — probed
   * r18: BOTH the r16 and HEAD builds of an untouched one-scan query
   * measured ~1.8x its committed Bench median under interleaved quiet
@@ -62,35 +63,18 @@ object BenchAdjudicate {
     println(s"[adjudicate] ${flagged.size} flag(s): " +
       flagged.map { case (q, r) => f"$q ($r%.2fx)" }.mkString(", "))
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def syncFs(): Unit =
-      try { new ProcessBuilder("sync").start().waitFor(); () }
-      catch { case _: Exception => () }
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      graft.registry.PipelineQueries.clearScratch(spark)
-      syncFs()
-      System.gc()
-    }
+    val spark = graft.Session.create()
     graft.Tables.load(spark, sfDir, "lineitem").count()
 
     def probeMedian(q: String): Double = {
       val fn = graft.SparkEntry.queries(q)
       fn(spark, sfDir).count() // untimed warm-up (JIT + staging attach)
-      hygiene()
+      graft.Bench.repHygiene(spark)
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val s = (System.nanoTime() - t0) / 1e9
-        hygiene()
+        graft.Bench.repHygiene(spark)
         s
       }.sorted
       ts(ts.length / 2)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold-session serving probe (VERDICT r17 #1 done-criteria): what a
   * BRAND-NEW JVM pays for its first serving call, with and without a
   * persisted artifact store.
@@ -24,13 +22,7 @@ object ColdSession {
     val qs = if (args.length > 1) args(1).split(",").toSeq
       else Seq("sim_ivf_topk", "sim_mips_ivf_topk", "dedup_simhash",
         "dedup_semdedup")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
     println(s"[cold] artifact root: ${graft.ext.ArtifactStore.root(spark)}")
     graft.Tables.load(spark, dir, "lineitem").count() // session warm
     qs.foreach { q =>

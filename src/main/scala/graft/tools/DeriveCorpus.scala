@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Build the derived `copies`x corpus (ALL tables — see
   * [[ScaleProbe.deriveSf1]] for the construction and why it models a
   * real 10x workload) without running the probe: the entry point the
@@ -24,13 +22,7 @@ object DeriveCorpus {
     val copies = if (args.length > 2) args(2).toInt else 10
     val nearDupEvery = if (args.length > 3) args(3).toInt else 16
     val docsOnly = args.length > 4 && args(4).toBoolean
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
     ScaleProbe.deriveSf1(spark, baseDir, outDir, copies, nearDupEvery,
       docsOnly)
     val tables =

@@ -2,8 +2,6 @@ package graft.tools
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Registry-wide physical-plan lint: renders every ExtQueries plan at
   * a given SF and reports scale anti-patterns — CartesianProduct
   * (never acceptable) and BroadcastNestedLoopJoin (acceptable ONLY
@@ -17,14 +15,7 @@ import org.apache.spark.sql.SparkSession
 object PlanLint {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
     for ((name, fn) <- graft.registry.ExtQueries.queries.toSeq.sortBy(_._1)) {
       try {
         val qe = fn(spark, sfDir).queryExecution

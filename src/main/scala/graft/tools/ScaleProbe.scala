@@ -161,15 +161,7 @@ object ScaleProbe {
     // optional comma-list to probe a subset (e.g. the doc-side family
     // at copies > 10, where the embedding side stays a 10x corpus)
     val only = if (args.length > 4) Some(args(4).split(",").toSet) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
 
     if (!new java.io.File(s"$outDir/embeddings.parquet").exists()) {
       println(s"[scaleprobe] deriving 10x corpus at $outDir")

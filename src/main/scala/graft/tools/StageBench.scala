@@ -33,14 +33,8 @@ object StageBench {
     val docsOnly = args.length > 1 && args(1) == "docs"
     val freshRoot = java.nio.file.Files
       .createTempDirectory("graft_stagebench_root").toString
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.artifactRoot", freshRoot)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
+    spark.conf.set("spark.graft.artifactRoot", freshRoot)
     graft.ext.Scratch.reclaimOnExit(freshRoot)
     import graft.ext.{Dedup, PairStage, Similarity}
 

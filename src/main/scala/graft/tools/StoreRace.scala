@@ -35,13 +35,8 @@ object StoreRace {
     val mode = args(0)
     val root = args(1)
     val dir = args(2)
-    val spark = SparkSession.builder().master("local[2]")
-      .appName(s"store-race-$mode")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.graft.artifactRoot", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
+    spark.conf.set("spark.graft.artifactRoot", root)
     try mode match {
       case "build" =>
         val id = args(3)

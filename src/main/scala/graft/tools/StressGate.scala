@@ -131,13 +131,7 @@ object StressGate {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_stress"
     val artifact = if (args.length > 2) args(2) else "STRESS_r17.json"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.create()
     graft.ext.GuardLog.ensure(spark)
 
     deriveHostile(spark, baseDir, outDir)
@@ -147,6 +141,9 @@ object StressGate {
     val queries = Seq("dedup_simhash", "dedup_simhash_delta",
       "dedup_minhash_lsh",
       "dedup_incremental", "dedup_ngram_jaccard",
+      // the only listed query whose pair core df-caps SHINGLE hashes
+      // (df_cap_shingles); the others cap tokens or bucket keys
+      "dedup_containment",
       "analytics_basket_pairs", "mm_phash_pairs", "corpus_curation_v3",
       // the SEMANTIC family (r17): batch SemDeDup over the mega
       // embedding clusters (split + recursion floor), the semantic

@@ -1,8 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Cumulative task-metric snapshot (deltas via [[TaskSnap.minus]]).
   * `runMs` is executor task-thread wall (includes IO/scheduler wait —
@@ -13,10 +16,17 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * data must agree on it. */
 final case class TaskSnap(runMs: Long, cpuNs: Long, input: Long,
                           shuffleRead: Long, shuffleWrite: Long,
-                          gcMs: Long = 0L, spill: Long = 0L) {
+                          gcMs: Long = 0L, spill: Long = 0L,
+                          tasks: Long = 0L, stages: Long = 0L,
+                          jobs: Long = 0L) {
   def minus(o: TaskSnap): TaskSnap = TaskSnap(runMs - o.runMs,
     cpuNs - o.cpuNs, input - o.input, shuffleRead - o.shuffleRead,
-    shuffleWrite - o.shuffleWrite, gcMs - o.gcMs, spill - o.spill)
+    shuffleWrite - o.shuffleWrite, gcMs - o.gcMs, spill - o.spill,
+    tasks - o.tasks, stages - o.stages, jobs - o.jobs)
+  def plus(o: TaskSnap): TaskSnap = TaskSnap(runMs + o.runMs,
+    cpuNs + o.cpuNs, input + o.input, shuffleRead + o.shuffleRead,
+    shuffleWrite + o.shuffleWrite, gcMs + o.gcMs, spill + o.spill,
+    tasks + o.tasks, stages + o.stages, jobs + o.jobs)
   def cpuSec: Double = cpuNs / 1e9
   def taskSec: Double = runMs / 1e3
   /** GC wall inside task windows (jvmGCTime — part of runMs, NOT of
@@ -24,33 +34,51 @@ final case class TaskSnap(runMs: Long, cpuNs: Long, input: Long,
   def gcSec: Double = gcMs / 1e3
 }
 
+object TaskSnap {
+  val Zero: TaskSnap = TaskSnap(0, 0, 0, 0, 0)
+}
+
 /** Per-task metric tally on the listener bus — the shared measurement
-  * instrument of the scale probe and the bench's per-stage
-  * attribution (VERDICT r10 #3: stage numbers from task metrics, not
-  * wall clocks a loaded machine can stretch). Two read paths:
+  * instrument of the scale probe, the bench's per-stage attribution
+  * (VERDICT r10 #3: stage numbers from task metrics, not wall clocks a
+  * loaded machine can stretch) and [[Profile]]'s layer counters. It
+  * also counts jobs started and stages completed. Two read paths:
   *
   *  - cumulative [[snap]] deltas, for code that brackets a sequential
   *    region (the curation stage probe, the scale probe's per-query
   *    bytes);
-  *  - [[window]] aggregation over per-task finish timestamps, for
+  *  - [[window]] / [[stageCosts]] aggregation over per-event
+  *    timestamps (task finish, job start, stage completion), for
   *    regions whose boundaries are only known from an external log
   *    (the sales pipeline writes stage start/end instants; tasks are
   *    attributed to the enclosing stage window — both clocks are this
-  *    JVM's currentTimeMillis).
+  *    JVM's currentTimeMillis) or from a caller's own clock.
   *
   * Events arrive async off the task path; [[quiesce]] waits (bounded)
   * for the stream to drain before a snapshot is read. */
 final class TaskTally extends SparkListener {
+  // (finish epoch ms, stage id, the task's metrics with tasks = 1)
   private val tasks =
-    new java.util.concurrent.ConcurrentLinkedQueue[(Long, TaskSnap)]
+    new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, TaskSnap)]
+  private val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+  private val stageEnds = new java.util.concurrent.ConcurrentLinkedQueue[Long]
   private val events = new AtomicLong
-  private val runMs = new AtomicLong
-  private val cpuNs = new AtomicLong
-  private val input = new AtomicLong
-  private val shuffleRead = new AtomicLong
-  private val shuffleWrite = new AtomicLong
-  private val gcMs = new AtomicLong
-  private val spill = new AtomicLong
+  private val total = new AtomicReference(TaskSnap.Zero)
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    events.incrementAndGet()
+    jobStarts.add(j.time)
+    total.updateAndGet(t => t.copy(jobs = t.jobs + 1))
+    ()
+  }
+
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+    events.incrementAndGet()
+    stageEnds.add(s.stageInfo.completionTime
+      .getOrElse(System.currentTimeMillis()))
+    total.updateAndGet(t => t.copy(stages = t.stages + 1))
+    ()
+  }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     events.incrementAndGet()
@@ -59,35 +87,38 @@ final class TaskTally extends SparkListener {
       val s = TaskSnap(m.executorRunTime, m.executorCpuTime,
         m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
         m.shuffleWriteMetrics.bytesWritten, m.jvmGCTime,
-        m.memoryBytesSpilled + m.diskBytesSpilled)
-      tasks.add((if (t.taskInfo != null) t.taskInfo.finishTime else 0L, s))
-      runMs.addAndGet(s.runMs); cpuNs.addAndGet(s.cpuNs)
-      input.addAndGet(s.input); shuffleRead.addAndGet(s.shuffleRead)
-      shuffleWrite.addAndGet(s.shuffleWrite)
-      gcMs.addAndGet(s.gcMs); spill.addAndGet(s.spill)
+        m.memoryBytesSpilled + m.diskBytesSpilled, tasks = 1)
+      tasks.add((if (t.taskInfo != null) t.taskInfo.finishTime else 0L,
+        t.stageId, s))
+      total.updateAndGet(_.plus(s))
       ()
     }
   }
 
-  def snap(): TaskSnap = TaskSnap(runMs.get, cpuNs.get, input.get,
-    shuffleRead.get, shuffleWrite.get, gcMs.get, spill.get)
+  def snap(): TaskSnap = total.get
 
-  /** Sum of tasks whose finish timestamp lies in [w0, w1] (epoch ms,
-    * inclusive — stage windows are sequential and disjoint). */
+  private def tasksIn(w0: Long, w1: Long): Seq[(Long, Int, TaskSnap)] =
+    tasks.asScala.filter(t => t._1 >= w0 && t._1 <= w1).toSeq
+
+  /** Sum of tasks whose finish timestamp, jobs whose start and stages
+    * whose completion lie in [w0, w1] (epoch ms, inclusive — stage
+    * windows are sequential and disjoint). */
   def window(w0: Long, w1: Long): TaskSnap = {
-    var r = 0L; var c = 0L; var i = 0L; var sr = 0L; var sw = 0L
-    var g = 0L; var sp = 0L
-    tasks.forEach { case (ft, s) =>
-      if (ft >= w0 && ft <= w1) {
-        r += s.runMs; c += s.cpuNs; i += s.input
-        sr += s.shuffleRead; sw += s.shuffleWrite
-        g += s.gcMs; sp += s.spill
-      }
-    }
-    TaskSnap(r, c, i, sr, sw, g, sp)
+    def in(q: java.util.Collection[Long]): Long =
+      q.asScala.count(t => t >= w0 && t <= w1).toLong
+    tasksIn(w0, w1).map(_._3).foldLeft(TaskSnap.Zero)(_ plus _)
+      .copy(stages = in(stageEnds), jobs = in(jobStarts))
   }
 
-  /** Wait (bounded) until no new task-end events for two polls. */
+  /** Per-stage sums of the tasks finishing in [w0, w1] with each
+    * stage's slowest task (ms), heaviest executor run time first. */
+  def stageCosts(w0: Long, w1: Long): Seq[(Int, TaskSnap, Long)] =
+    tasksIn(w0, w1).groupBy(_._2).toSeq.map { case (id, ts) =>
+      (id, ts.map(_._3).foldLeft(TaskSnap.Zero)(_ plus _),
+        ts.map(_._3.runMs).max)
+    }.sortBy(-_._2.runMs)
+
+  /** Wait (bounded) until no new listener events for two polls. */
   def quiesce(pollMs: Long = 150L): Unit = {
     var last = -1L
     var stable = 0

@@ -5,20 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM, one session). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_cat").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Session.create("WARN", Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh_cat").toString))
   val sf0001 = "/root/testdata/sf0.001"
 }
 

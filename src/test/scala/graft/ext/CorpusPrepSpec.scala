@@ -169,8 +169,8 @@ class CorpusPrepSpec extends SparkSpec {
     // same computation, so stage timings attribute the verified query
     val fused = graft.registry.ExtQueries.queries("corpus_curation_v2")(
       spark, sf0001).as[(String, Long, Long, Long)].collect().toSet
-    var cur = graft.registry.ExtQueries.curationV2Docs(spark, sf0001)
-    for ((_, f) <- graft.registry.ExtQueries.curationV2Stages(spark, sf0001))
+    var cur = graft.registry.QueryShared.curationV2Docs(spark, sf0001)
+    for ((_, f) <- graft.registry.QueryShared.curationV2Stages(spark, sf0001))
       cur = Materialize.eager(f(cur))
     val staged = cur.as[(String, Long, Long, Long)].collect().toSet
     assert(fused.nonEmpty, "curation v2 selected nothing at sf0.001")

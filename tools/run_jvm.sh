@@ -1,6 +1,6 @@
 #!/bin/bash
-# Direct-JVM launcher for graft mains (TimeQuery, Bench, Verify, ...):
-#   tools/run_jvm.sh graft.tools.TimeQuery text_tfidf_top_terms /root/testdata/sf0.1 3
+# Direct-JVM launcher for graft mains (Profile, Bench, Verify, ...):
+#   tools/run_jvm.sh graft.tools.Profile text_tfidf_top_terms <sf_dir> --reps 3
 #
 # Why not `sbt runMain`: the sbt parent pumps the forked JVM's log
 # stream at ~0.5 cores at sf1 task rates — enough to trip the bench's
