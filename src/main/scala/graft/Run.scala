@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 import graft.control.{ControlPlane, RotatingTextLogger}
 
@@ -101,23 +100,9 @@ object Run {
   private def execute(name: String, pipelineName: String, runId: String,
                       a: Args, text: RotatingTextLogger,
                       sessionBuilder: () => SparkSession): Int = {
-    import graft.registry.RetailQueries.{AsOf, MetroNations, NationRegionMap,
-      customers, products, sales, stores}
     try {
-      val spark = sessionBuilder()
-      val p = new Pipeline(spark, a.warehouse, a.logs, AsOf,
-        metros = MetroNations, regionMap = NationRegionMap)
-      val source = name match {
-        case "sales" => sales(spark, a.data)
-        case "customers" => customers(spark, a.data)
-        case "products" => products(spark, a.data)
-        case "stores" => stores(spark, a.data)
-      }
-      val dedupOrder = if (name == "sales") Some(Seq(
-        col("sale_date"), col("customer_id"), col("product_id"),
-        col("store_id"), col("quantity"), col("unit_price"),
-        col("discount_pct"))) else None
-      val path = p.run(name, source, dedupOrder)
+      val path = graft.registry.PipelineQueries.runTable(sessionBuilder(),
+        a.data, name, a.warehouse, a.logs)
       text.info(runId, pipelineName, "runner", s"pipeline SUCCESS -> $path")
       0
     } catch {

@@ -382,8 +382,7 @@ object ExtQueriesCorpus {
     // near-dup keep-representative -> benchmark decontamination ->
     // per-source token-budget selection, fused into ONE plan under one
     // composed oracle — the full selection path from raw corpus to
-    // budgeted training set. Per-stage wall attribution comes from
-    // curationV2StageMetrics in the bench.
+    // budgeted training set.
     "corpus_curation_v2" -> ((s, dir) =>
       curationV2Stages(s, dir).foldLeft(curationV2Docs(s, dir)) {
         case (df, (_, stage)) => stage(df)

@@ -51,12 +51,13 @@ object PipelineQueries {
       col("store_id"), col("quantity"), col("unit_price"),
       col("discount_pct"))) else None
 
-  private def runInto(s: SparkSession, dir: String, table: String)
-      : (String, String) = {
-    val base = java.nio.file.Files
-      .createTempDirectory(scratchRoot(s), "run")
-    val wh = base.resolve("wh").toString
-    val logs = base.resolve("logs").toString
+  /** Runs `table`'s pipeline from the corpus at `dir` into warehouse
+    * `wh` with run/stage logs under `logs`, returning the loaded
+    * table's path: the one table -> source selection (and sales
+    * keep-first order) shared by the registered pipeline queries and
+    * the [[graft.Run]] CLI. */
+  private[graft] def runTable(s: SparkSession, dir: String, table: String,
+                              wh: String, logs: String): String = {
     val p = new Pipeline(s, wh, logs, AsOf,
       metros = MetroNations, regionMap = NationRegionMap)
     val source = table match {
@@ -65,46 +66,15 @@ object PipelineQueries {
       case "products" => products(s, dir)
       case "stores" => stores(s, dir)
     }
-    (p.run(table, source, dedupOrderFor(table)), logs)
+    p.run(table, source, dedupOrderFor(table))
   }
 
   private def runPipeline(s: SparkSession, dir: String,
-                          table: String): DataFrame =
-    s.read.parquet(runInto(s, dir, table)._1)
-
-  /** Run the sales pipeline once and return (stage name, wall seconds)
-    * in execution order, parsed from the pipeline's own stage log —
-    * the reference's reporting granularity (its runner logs per-stage
-    * timings the same way), so a bench regression is attributable to
-    * EXTRACT / TRANSFORM_P1 / TRANSFORM_P2 / LOAD_DATE_DIM / LOAD
-    * rather than a single end-to-end blob. */
-  def salesStageSeconds(s: SparkSession, dir: String)
-      : Seq[(String, Double)] =
-    salesStageWindows(s, dir).map { case (n, a, b) => n -> ((b - a) / 1e3) }
-
-  /** One sales pipeline run's per-stage [start, end] windows (epoch
-    * ms, from the run's own stage log; stages execute sequentially so
-    * the windows are disjoint). The bench's task-metric attribution
-    * maps listener task-end timestamps into these windows — both
-    * clocks are this JVM's currentTimeMillis. */
-  def salesStageWindows(s: SparkSession, dir: String)
-      : Seq[(String, Long, Long)] = {
-    val (_, logs) = runInto(s, dir, "sales")
-    val file = java.nio.file.Paths.get(logs, "etl_stage_log.jsonl")
-    val name = """"stage_name":"([^"]+)"""".r
-    val status = """"status":"([^"]+)"""".r
-    val times = """"start_time":"([^"]+)","end_time":"([^"]+)"""".r
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(file).asScala.toSeq.flatMap { line =>
-      (name.findFirstMatchIn(line), status.findFirstMatchIn(line),
-        times.findFirstMatchIn(line)) match {
-        case (Some(n), Some(st), Some(t)) if st.group(1) == "SUCCESS" =>
-          Some((n.group(1),
-            java.time.Instant.parse(t.group(1)).toEpochMilli,
-            java.time.Instant.parse(t.group(2)).toEpochMilli))
-        case _ => None
-      }
-    }
+                          table: String): DataFrame = {
+    val base = java.nio.file.Files
+      .createTempDirectory(scratchRoot(s), "run")
+    s.read.parquet(runTable(s, dir, table, base.resolve("wh").toString,
+      base.resolve("logs").toString))
   }
 
   val queries: Map[String, Q] = Map(

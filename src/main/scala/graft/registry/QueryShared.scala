@@ -31,9 +31,8 @@ object QueryShared {
   // ---- curation v2: the composed flagship's stage chain ----
   // Exposed as (name, stage-transform) pairs so the SAME chain serves
   // two consumers: the registered query folds the stages into one
-  // fused plan (what the oracle hash-checks), and the bench stage
-  // probe materializes between stages to attribute wall time — the
-  // salesStageSeconds pattern for the LLM side.
+  // fused plan (what the oracle hash-checks), and the funnel audit
+  // counts the rows surviving each stage.
 
   /** Stage-0 input of the v2 curation chain. */
   private[graft] def curationV2Docs(s: SparkSession, dir: String): DataFrame =
@@ -162,30 +161,6 @@ object QueryShared {
     }),
     "temp_mixture" -> ((in: DataFrame) =>
       Corpus.temperatureSample(in, col("source"), col("doc_id"))))
-
-  /** Per-stage wall seconds for the v2 curation chain: each stage runs
-    * against the MATERIALIZED previous output, so a stage's number is
-    * its own work, not a recompute of everything before it. When a
-    * [[graft.tools.TaskTally]] is supplied, each stage is also
-    * bracketed with quiesced cumulative snapshots (the stages run
-    * sequentially, so the delta is exactly that stage's tasks) —
-    * per-stage cpu/task seconds and bytes, the statistics a loaded
-    * machine cannot stretch the way it stretches wall clocks. */
-  def curationV2StageMetrics(s: SparkSession, dir: String,
-                             tally: Option[graft.tools.TaskTally])
-      : Seq[(String, Double, graft.tools.TaskSnap)] = {
-    val zero = graft.tools.TaskSnap.Zero
-    var cur = curationV2Docs(s, dir)
-    curationV2Stages(s, dir).map { case (name, f) =>
-      val pre = tally.map { t => t.quiesce(60); t.snap() }.getOrElse(zero)
-      val t0 = System.nanoTime()
-      cur = graft.ext.Materialize.eager(f(cur))
-      val wall = (System.nanoTime() - t0) / 1e9
-      val d = tally.map { t => t.quiesce(60); t.snap().minus(pre) }
-        .getOrElse(zero)
-      (name, wall, d)
-    }
-  }
 
   // ---- shared SQL fragments ----
 

@@ -16,9 +16,10 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * artifact's min (the same statistic + 0.2s absolute floor
   * [[graft.Bench.regressions]] flags), it re-probes the query SAME-
   * BOOT with the bench's rep hygiene ([[graft.Bench.repHygiene]]),
-  * timing `.count()` like the Bench medians it is compared against,
-  * and compares the fresh probe median against the last COMMITTED
-  * median (the r14/r17 precedent):
+  * timing the full noop-sink output ([[graft.FullOutput.time]]) like
+  * the Bench medians it is compared against, and compares the fresh
+  * probe median against the last COMMITTED median (the r14/r17
+  * precedent):
   *
   * Probe medians and committed medians come from DIFFERENT boots and
   * different JIT contexts (an isolated single-query probe never reaches
@@ -67,13 +68,11 @@ object BenchAdjudicate {
     graft.Tables.load(spark, sfDir, "lineitem").count()
 
     def probeMedian(q: String): Double = {
-      val fn = graft.SparkEntry.queries(q)
-      fn(spark, sfDir).count() // untimed warm-up (JIT + staging attach)
+      // untimed warm-up (JIT + staging attach)
+      graft.FullOutput.time(spark, q, sfDir)
       graft.Bench.repHygiene(spark)
       val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val s = (System.nanoTime() - t0) / 1e9
+        val s = graft.FullOutput.time(spark, q, sfDir).totalS
         graft.Bench.repHygiene(spark)
         s
       }.sorted

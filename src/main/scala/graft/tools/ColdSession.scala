@@ -12,7 +12,9 @@ package graft.tools
   *     its own probe-join execution.
   *
   * Usage: runMain graft.tools.ColdSession [sfDir] [q1,q2,...]
-  * Prints first-call and steady-state (second-call) wall per query.
+  * Prints first-call and steady-state (second-call) wall per query,
+  * each timed to its full output in the noop sink
+  * ([[graft.FullOutput.time]]).
   * Run it twice — once per root — and diff the first-call column;
   * the second-call column should be root-invariant (the serving-path
   * floor). */
@@ -26,13 +28,8 @@ object ColdSession {
     println(s"[cold] artifact root: ${graft.ext.ArtifactStore.root(spark)}")
     graft.Tables.load(spark, dir, "lineitem").count() // session warm
     qs.foreach { q =>
-      val fn = graft.SparkEntry.queries(q)
-      val t0 = System.nanoTime()
-      fn(spark, dir).count()
-      val first = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      fn(spark, dir).count()
-      val second = (System.nanoTime() - t1) / 1e9
+      val first = graft.FullOutput.time(spark, q, dir).totalS
+      val second = graft.FullOutput.time(spark, q, dir).totalS
       println(f"[cold] $q%-24s first ${first}%7.2f s   second ${second}%7.2f s")
     }
     spark.stop()

@@ -1,12 +1,12 @@
 package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.FullOutput
 
 /** The profiling front door for registered queries:
   *
@@ -17,12 +17,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the configuration the bench times (sfDir defaults to
   * `SPARK_GRAFT_SF_DIR`). For each query:
   *  - one untimed warm-up per arm (JIT, codegen, staging, attaches);
-  *  - `N` timed reps per arm (default 3), each from the query call to
-  *    its FULL output in Spark's noop sink, split into `construct_s`
-  *    (the query function: planning plus eager staging) and
-  *    `output_s` (the write), with [[graft.Bench.repHygiene]] between
-  *    reps. Never `.count()`: column pruning lets a count drop every
-  *    derived column and unused aggregate value;
+  *  - `N` timed reps per arm (default 3), each a [[FullOutput.time]]:
+  *    from the query call to its FULL output in Spark's noop sink,
+  *    split into `construct_s` and `output_s`, with
+  *    [[graft.Bench.repHygiene]] between reps;
   *  - with `--ab key=value`, two arms interleaved rep by rep: the conf
   *    set, and unset (a runtime conf read at query construction, e.g.
   *    `spark.graft.spreadMaxBytes=0`); ambient load and JIT state hit
@@ -35,22 +33,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    action was never executed (`isFinalPlan=false`). */
 object Profile {
 
-  final case class Rep(constructS: Double, outputS: Double, rows: Long) {
-    def totalS: Double = constructS + outputS
-  }
-
   /** One arm's timed reps plus its last rep's counters and plan. */
-  final case class Arm(name: String, reps: Seq[Rep], layers: TaskSnap,
-                       stages: Seq[(Int, TaskSnap, Long)], plan: SparkPlan)
+  final case class Arm(name: String, reps: Seq[FullOutput.Timing],
+                       layers: TaskSnap, stages: Seq[(Int, TaskSnap, Long)],
+                       plan: SparkPlan)
 
-  private val Tag = "graft_profile_"
-  private val tags = new AtomicLong
-
-  /** The QueryExecution of each tagged noop write, keyed by its tag. */
+  /** The QueryExecution of each timed noop write, keyed by its tag. */
   private final class WriteCapture extends QueryExecutionListener {
     private val seen = new ConcurrentHashMap[String, QueryExecution]
     override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-      qe.observedMetrics.keys.filter(_.startsWith(Tag))
+      qe.observedMetrics.keys.filter(_.startsWith(FullOutput.Tag))
         .foreach(seen.put(_, qe))
     override def onFailure(f: String, qe: QueryExecution,
                            e: Exception): Unit = ()
@@ -66,7 +58,6 @@ object Profile {
 
   def profile(spark: SparkSession, name: String, sfDir: String, reps: Int,
               ab: Option[(String, String)] = None): Seq[Arm] = {
-    val fn = graft.SparkEntry.queries(name)
     val arms: Seq[(String, () => Unit)] = ab match {
       case None => Seq("base" -> (() => ()))
       case Some((k, v)) => Seq(s"$k=$v" -> (() => spark.conf.set(k, v)),
@@ -79,21 +70,15 @@ object Profile {
     spark.listenerManager.register(capture)
 
     // (rep, its epoch-ms window, the write's QueryExecution)
-    def once(setArm: () => Unit): (Rep, Long, Long, QueryExecution) = {
+    def once(setArm: () => Unit)
+        : (FullOutput.Timing, Long, Long, QueryExecution) = {
       setArm()
-      val tag = Tag + tags.incrementAndGet()
       val w0 = System.currentTimeMillis()
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.observe(tag, count(lit(1)).as("rows")).write.format("noop")
-        .mode("overwrite").save()
-      val t2 = System.nanoTime()
+      val rep = FullOutput.time(spark, name, sfDir)
       val w1 = System.currentTimeMillis()
-      val qe = capture.take(tag)
+      val qe = capture.take(rep.tag)
       graft.Bench.repHygiene(spark)
-      (Rep((t1 - t0) / 1e9, (t2 - t1) / 1e9,
-        qe.observedMetrics(tag).getLong(0)), w0, w1, qe)
+      (rep, w0, w1, qe)
     }
 
     try {

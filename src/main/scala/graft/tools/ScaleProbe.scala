@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   * union of identical copies would instead square the pair count and
   * probe a 100x-duplication regime no one claims to handle.
   *
-  * Wall time alone proved too blunt: at 50k -> 500k docs five of six
-  * r9 ratios sat at 1.4-1.6x, dominated by fixed per-query overhead
+  * Wall time is each query's full output in the noop sink
+  * ([[graft.FullOutput.time]]), median over the reps after one untimed
+  * warm-up. Wall time alone proved too blunt: at 50k -> 500k docs five
+  * of six r9 ratios sat at 1.4-1.6x, dominated by fixed per-query overhead
   * (session, planning, small-stage scheduling), proving only "no
   * regime change yet". The probe therefore ALSO records BYTES MOVED —
   * per-task input / shuffle-read / shuffle-write sums captured by a
@@ -44,9 +46,8 @@ object ScaleProbe {
     "dedup_bloom_incremental", "sim_ivf_topk", "graph_pagerank",
     "dedup_containment")
 
-  // Per-task byte tally: the shared [[TaskTally]] instrument (r11
-  // extraction — the bench's stage attribution reuses the same
-  // listener), read here through its cumulative-snapshot path.
+  // Per-task byte tally: the shared [[TaskTally]] instrument, read
+  // here through its cumulative-snapshot path.
 
   /** Derive a `copies`x corpus. Documents scale to any factor (every
     * copy's tokens carry a distinct suffix — no cross-copy shingle
@@ -181,16 +182,13 @@ object ScaleProbe {
       * while read >> write exposes multi-pass consumption (spilled
       * sort-merge joins re-reading runs). */
     def measure(name: String, dir: String): (Double, Long, Long, Long) = {
-      val fn = graft.SparkEntry.queries(name)
-      fn(spark, dir).count() // untimed warm-up
+      graft.FullOutput.time(spark, name, dir) // untimed warm-up
       spark.catalog.clearCache(); System.gc()
       var bytes = (0L, 0L, 0L)
       val ts = (1 to reps).map { r =>
         val pre = if (r == reps) { tally.quiesce(); tally.snap() }
           else TaskSnap(0, 0, 0, 0, 0)
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val s = (System.nanoTime() - t0) / 1e9
+        val s = graft.FullOutput.time(spark, name, dir).totalS
         if (r == reps) {
           tally.quiesce()
           val d = tally.snap().minus(pre)

@@ -39,20 +39,15 @@ object TaskSnap {
 }
 
 /** Per-task metric tally on the listener bus — the shared measurement
-  * instrument of the scale probe, the bench's per-stage attribution
-  * (VERDICT r10 #3: stage numbers from task metrics, not wall clocks a
-  * loaded machine can stretch) and [[Profile]]'s layer counters. It
+  * instrument of the scale probe and [[Profile]]'s layer counters
+  * (task metrics, not wall clocks a loaded machine can stretch). It
   * also counts jobs started and stages completed. Two read paths:
   *
   *  - cumulative [[snap]] deltas, for code that brackets a sequential
-  *    region (the curation stage probe, the scale probe's per-query
-  *    bytes);
+  *    region (the scale probe's per-query bytes);
   *  - [[window]] / [[stageCosts]] aggregation over per-event
-  *    timestamps (task finish, job start, stage completion), for
-  *    regions whose boundaries are only known from an external log
-  *    (the sales pipeline writes stage start/end instants; tasks are
-  *    attributed to the enclosing stage window — both clocks are this
-  *    JVM's currentTimeMillis) or from a caller's own clock.
+  *    timestamps (task finish, job start, stage completion), for a
+  *    region bounded by the caller's own currentTimeMillis clock.
   *
   * Events arrive async off the task path; [[quiesce]] waits (bounded)
   * for the stream to drain before a snapshot is read. */
@@ -101,8 +96,7 @@ final class TaskTally extends SparkListener {
     tasks.asScala.filter(t => t._1 >= w0 && t._1 <= w1).toSeq
 
   /** Sum of tasks whose finish timestamp, jobs whose start and stages
-    * whose completion lie in [w0, w1] (epoch ms, inclusive — stage
-    * windows are sequential and disjoint). */
+    * whose completion lie in [w0, w1] (epoch ms, inclusive). */
   def window(w0: Long, w1: Long): TaskSnap = {
     def in(q: java.util.Collection[Long]): Long =
       q.asScala.count(t => t >= w0 && t <= w1).toLong
@@ -119,12 +113,12 @@ final class TaskTally extends SparkListener {
     }.sortBy(-_._2.runMs)
 
   /** Wait (bounded) until no new listener events for two polls. */
-  def quiesce(pollMs: Long = 150L): Unit = {
+  def quiesce(): Unit = {
     var last = -1L
     var stable = 0
     val deadline = System.nanoTime() + 5_000_000_000L
     while (stable < 2 && System.nanoTime() < deadline) {
-      Thread.sleep(pollMs)
+      Thread.sleep(150)
       val e = events.get()
       if (e == last) stable += 1 else { stable = 0; last = e }
     }

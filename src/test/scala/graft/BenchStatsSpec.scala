@@ -3,12 +3,15 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import scala.collection.immutable.ListMap
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench's contamination machinery, tested as pure functions: the
   * min-statistic regression compare (a deliberately planted 2x
-  * slowdown must trip it), prior-artifact parsing (qmin field, spread
-  * fallback, garbage tolerance), and the foreign-cpu ambient signal
+  * slowdown must trip it), prior-artifact parsing (qmin field, schema
+  * guard, garbage tolerance, the writer's own output), and the
+  * foreign-cpu ambient signal
   * (our own busy-spin must NOT register as ambient load — that
   * self-blindness is the whole point of the /proc/self subtraction).
   */
@@ -38,49 +41,75 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(Bench.regressions(prev, cur, threshold = 1.3).isEmpty)
   }
 
-  test("priorMins reads qmin, falls back to spread minima, tolerates garbage") {
+  /** Writes `body` to `name` under `dir`, returning its path. */
+  private def write(dir: java.nio.file.Path, name: String,
+                    body: String): String = {
+    val p = dir.resolve(name)
+    Files.write(p, body.getBytes(StandardCharsets.UTF_8))
+    p.toString
+  }
+
+  test("priorMins reads qmin, refuses pre-noop schemas, tolerates garbage") {
     val dir = Files.createTempDirectory("graft_bench_spec")
-    def write(name: String, body: String): String = {
-      val p = dir.resolve(name)
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8))
-      p.toString
-    }
-    val withQmin = write("a.json",
-      """{"queries":{"q1":2.0},"qmin":{"q1":1.5,"q2":0.7}}""")
+    val withQmin = write(dir, "a.json",
+      s"""{"schema":${Bench.ArtifactSchema},""" +
+        """"queries":{"q1":2.0},"qmin":{"q1":1.5,"q2":0.7}}""")
     assert(Bench.priorMins(withQmin) === Map("q1" -> 1.5, "q2" -> 0.7))
-    val spreadOnly = write("b.json",
-      """{"spread":{"q1":[1.1,1.5,9.9],"q2":[0.4,0.5,0.6]}}""")
-    assert(Bench.priorMins(spreadOnly) === Map("q1" -> 1.1, "q2" -> 0.4))
-    assert(Bench.priorMins(write("c.json", "not json {")) === Map.empty)
+    assert(Bench.priorMins(write(dir, "c.json", "not json {")) === Map.empty)
     assert(Bench.priorMins(dir.resolve("missing.json").toString)
       === Map.empty)
-    // schema versioning (r12): a same- or older-schema artifact parses;
+    // schema 2 and unversioned artifacts timed `.count()`, which column
+    // pruning lets skip the derived columns the noop sink computes:
+    // their mins are a different instrument, so the compare is skipped
+    assert(Bench.ArtifactSchema === 3)
+    val v2 = write(dir, "d.json", """{"schema":2,"qmin":{"q1":1.5}}""")
+    assert(Bench.priorMins(v2) === Map.empty)
+    val unversioned = write(dir, "b.json", """{"qmin":{"q1":1.5}}""")
+    assert(Bench.priorMins(unversioned) === Map.empty)
     // a FUTURE schema is refused outright — the reader must never guess
     // at a format it doesn't know (driver ADVICE r11: version the
     // artifact so field-meaning drift fails loudly, not silently)
-    val v2 = write("d.json",
-      s"""{"schema":${Bench.ArtifactSchema},"qmin":{"q1":1.5}}""")
-    assert(Bench.priorMins(v2) === Map("q1" -> 1.5))
-    val future = write("e.json",
+    val future = write(dir, "e.json",
       s"""{"schema":${Bench.ArtifactSchema + 1},"qmin":{"q1":1.5}}""")
     assert(Bench.priorMins(future) === Map.empty)
   }
 
+  test("an artifact from the bench's own writer round-trips through " +
+      "priorMins and priorMedians") {
+    val json = Bench.artifactJson(
+      "metric" -> "total", "value" -> 3.5,
+      "queries" -> ListMap("q1" -> 2.0, "q2" -> 1.5),
+      "rows" -> ListMap("q1" -> 10L, "q2" -> 0L),
+      "qmin" -> ListMap("q1" -> 1.75, "q2" -> 1.25),
+      "spread" -> ListMap("q1" -> Seq(1.75, 2.0, 2.5)),
+      "errors" -> ListMap("q3" -> "boom: \"quoted\"\n\tand a tab"))
+    assert(json.startsWith(
+      s"""{"schema":${Bench.ArtifactSchema},"sink":"noop","""), json)
+    val path = write(Files.createTempDirectory("graft_bench_rt"), "rt.json",
+      json)
+    assert(Bench.priorMins(path) === Map("q1" -> 1.75, "q2" -> 1.25))
+    assert(Bench.priorMedians(path) === Map("q1" -> 2.0, "q2" -> 1.5))
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json)
+    assert(root.path("rows").path("q1").asLong === 10L)
+    assert(root.path("errors").path("q3").asText ===
+      "boom: \"quoted\"\n\tand a tab")
+  }
+
   test("priorMedians reads the queries field under the same schema guard") {
     val dir = Files.createTempDirectory("graft_bench_spec_med")
-    def write(name: String, body: String): String = {
-      val p = dir.resolve(name)
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8))
-      p.toString
-    }
     // medians come from "queries", never from qmin
-    val both = write("a.json",
-      """{"queries":{"q1":2.0,"q2":0.9},"qmin":{"q1":1.5}}""")
+    val both = write(dir, "a.json",
+      s"""{"schema":${Bench.ArtifactSchema},""" +
+        """"queries":{"q1":2.0,"q2":0.9},"qmin":{"q1":1.5}}""")
     assert(Bench.priorMedians(both) === Map("q1" -> 2.0, "q2" -> 0.9))
-    assert(Bench.priorMedians(write("b.json", "not json {")) === Map.empty)
+    assert(Bench.priorMedians(write(dir, "b.json", "not json {"))
+      === Map.empty)
     assert(Bench.priorMedians(dir.resolve("missing.json").toString)
       === Map.empty)
-    val future = write("c.json",
+    val v2 = write(dir, "d.json", """{"schema":2,"queries":{"q1":2.0}}""")
+    assert(Bench.priorMedians(v2) === Map.empty)
+    val future = write(dir, "c.json",
       s"""{"schema":${Bench.ArtifactSchema + 1},"queries":{"q1":2.0}}""")
     assert(Bench.priorMedians(future) === Map.empty)
   }

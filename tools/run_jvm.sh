@@ -21,7 +21,12 @@ for p in java.base/java.lang java.base/java.lang.invoke \
          java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
+# Heap: SPARK_DRIVER_MEM, else half of MemTotal, at least 2g and capped
+# at 30g (under the 32g compressed-oops boundary) — build.sbt's rule.
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 30 ? 30 : g) "g"}' 2>/dev/null </proc/meminfo \
+  || echo 2g)}"
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-30g}" \
+  -Xmx"$HEAP" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
