@@ -91,6 +91,19 @@ object Materialize {
     } finally pool.shutdown()
   }
 
+  /** Run `df`'s exchanges once (now under adaptive execution, else in
+    * the first consumer's job) and hand back a frame over their output
+    * that keeps the final plan's partitioning (a
+    * `repartition(pk)` stays `HashPartitioning(pk)`), so every consumer
+    * that needs that distribution plans no exchange of its own. It
+    * stores no blocks: the shuffle files the map stage wrote serve each
+    * consumer (its jobs skip the map stage), and lineage is kept, so a
+    * lost executor's map outputs are recomputed, not lost. Unlike
+    * [[eager]] it is only worth it where the staged plan ends in an
+    * exchange: a narrow plan would re-run in full under each consumer. */
+  def staged(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftColumnBridge.overExecutedPlan(df)
+
   def eager(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val dynamic = sc.getConf.getBoolean("spark.dynamicAllocation.enabled",

@@ -76,11 +76,16 @@ object Clean {
     val stateWidth =
       df.schema.map(_.dataType.defaultSize.toLong).sum + 16L
     graft.functions.Tuning.sizeObjectHashAggregate(df.sparkSession, stateWidth)
-    val payload = struct(df.columns.map(col): _*)
+    // the PK comes out as the grouping attribute itself, so a frame
+    // hash-distributed by the PK stays so (a PK re-read out of the
+    // payload struct would be a new attribute, and the next groupBy(pk)
+    // would plan another exchange); the payload holds the rest
+    val payload = struct(df.columns.filterNot(pk.contains).map(col): _*)
     df.groupBy(pk.map(col): _*)
       .agg(graft.functions.KeepFirst.keepFirst(struct(order), payload)
         .as("_graft_row"))
-      .select(df.columns.map(c => col(s"_graft_row.$c").as(c)): _*)
+      .select(df.columns.map(c =>
+        if (pk.contains(c)) col(c) else col(s"_graft_row.$c").as(c)): _*)
   }
 
   /** P5: cast every declared column to its declared type
@@ -99,7 +104,13 @@ object Clean {
     * `dedupOrder`: explicit deterministic keep-"first" order; None means
     * file order via the read ordinal (the reference's semantics, which
     * no replayable oracle can express — callers that need cross-engine
-    * determinism pass a total order instead). */
+    * determinism pass a total order instead).
+    *
+    * Standalone form over a raw frame: it renames, attaches the ordinal
+    * and distributes by the PK itself, then runs [[cleanDistributed]].
+    * [[graft.Pipeline]] calls [[cleanDistributed]] directly on the
+    * frame its EXTRACT stage already distributed, so T1 neither
+    * re-scans the source nor shuffles it again. */
   def clean(df: DataFrame, pk: Seq[String],
             stringDefaults: Map[String, String],
             numericDefaults: Map[String, Double],
@@ -108,7 +119,6 @@ object Clean {
     // ordinal attaches after the rename (normalizeName would strip the
     // marker's leading underscore)
     val renamed = withOrdinal(renameSnakeCase(df))
-    val noNullPk = dropNullPk(renamed, pk)
     // Distribute by the dedup key BEFORE the per-row work: the
     // keep-first aggregate requires exactly this hash distribution, so
     // this is the SAME single shuffle the plan would contain anyway,
@@ -120,10 +130,34 @@ object Clean {
     // would otherwise run on one core). The ordinal is attached above,
     // before the exchange, so file-order keep-first semantics are
     // untouched by the redistribution.
-    val distributed = noNullPk.repartition(pk.map(col): _*)
-    val filled = fillDefaults(distributed, stringDefaults, numericDefaults)
-    val order = dedupOrder.map(struct(_: _*)).getOrElse(col(OrdinalCol))
-    val deduped = dedupKeepFirst(filled, pk, order).drop(OrdinalCol)
+    val distributed = dropNullPk(renamed, pk).repartition(pk.map(col): _*)
+    cleanDistributed(distributed, pk, stringDefaults, numericDefaults,
+      declared, dedupOrder)
+  }
+
+  /** T1 after the rename, over a frame that already carries
+    * [[OrdinalCol]] and is hash-distributed by `pk` — the shape
+    * [[graft.Pipeline]] stages once in EXTRACT. Plans no exchange of
+    * its own: the null-PK drop, fills, keep-first dedup and casts all
+    * run on that distribution, and the output is still distributed by
+    * `pk` (the dedup keeps the PK as its grouping attribute and the
+    * casts leave an already-declared PK type alone), so a later
+    * `groupBy(pk)` over it or over a cache of it needs no exchange
+    * either. With an explicit `dedupOrder` the ordinal leaves before
+    * the dedup, so the aggregate state never carries it. */
+  def cleanDistributed(df: DataFrame, pk: Seq[String],
+                       stringDefaults: Map[String, String],
+                       numericDefaults: Map[String, Double],
+                       declared: Map[String, DataType],
+                       dedupOrder: Option[Seq[Column]] = None): DataFrame = {
+    val filled = fillDefaults(dropNullPk(df, pk), stringDefaults,
+      numericDefaults)
+    val deduped = dedupOrder match {
+      case Some(order) =>
+        dedupKeepFirst(filled.drop(OrdinalCol), pk, struct(order: _*))
+      case None =>
+        dedupKeepFirst(filled, pk, col(OrdinalCol)).drop(OrdinalCol)
+    }
     castDeclaredTypes(deduped, declared)
   }
 }

@@ -121,22 +121,22 @@ object Gates {
     * [[requireNoFullRowDups]]) costs two full source scans; this costs
     * one on clean data, falling back to the exact hash-collision
     * confirm pass only when candidates exist. Raise order is the
-    * contract order: empty, null-pct, dups. Returns the row count. */
+    * contract order: empty, null-pct, dups. Returns the row count.
+    *
+    * With `pk` given the groups are `(pk, row hash)` instead: identical
+    * rows share a PK, so every duplicate still lands in one group (the
+    * candidates are a subset of the hash-only ones, and the exact
+    * confirm is unchanged), and a `df` already hash-distributed by the
+    * PK — the frame [[graft.Pipeline]] stages in EXTRACT — needs no
+    * exchange at all: the gate is one pass over the staged shuffle. */
   def requireSourceGates(df: DataFrame,
-                         maxPct: Double = Contracts.MaxNullPct): Long = {
+                         maxPct: Double = Contracts.MaxNullPct,
+                         pk: Seq[String] = Nil): Long = {
     val cols = df.columns
     val withH = df.withColumn("_graft_h", xxhash64(cols.map(col): _*))
     val gAggs = count(lit(1)).as("_n") +:
       cols.map(c => sum(col(c).isNull.cast("long")).as(s"_null_$c")).toSeq
-    // hash-distribute BEFORE the per-row work (same single exchange
-    // the groupBy needs, moved earlier) so null-pattern evaluation and
-    // partial aggregation run at full parallelism even when the scan
-    // has one split. Scale-neutral trade: this aggregate's partial row
-    // (hash + |cols| null sums) is as wide as the data row, so the
-    // map-side combine the early exchange gives up was saving nothing
-    // on the expected near-zero-dup input.
-    val grouped = withH.repartition(col("_graft_h"))
-      .groupBy(col("_graft_h"))
+    val grouped = withH.groupBy(pk.map(col) :+ col("_graft_h"): _*)
       .agg(gAggs.head, gAggs.tail: _*)
     val fAggs = (coalesce(sum(col("_n")), lit(0L)).as("n") +:
       cols.map(c =>
@@ -159,23 +159,44 @@ object Gates {
     n
   }
 
-  /** Fused PK integrity stats in ONE job: (total rows, rows with a
-    * NULL pk column, duplicated pk-value groups). The separate
-    * formulation costs two passes over the frame — a scan-aggregate
-    * for count+null and a groupBy for dups; this derives all three
-    * from the single groupBy(pk) shuffle the dup check needs anyway
-    * (partial aggregation collapses unique pks map-side, so the
-    * exchange carries ~one row per key either way). Callers raise in
-    * their own contract order — computing the numbers together does
-    * not reorder the gate failure priority. */
-  def pkIntegrityStats(df: DataFrame, pk: Seq[String]): (Long, Long, Long) = {
+  /** What [[pkIntegrityStats]] counts: rows, rows with a NULL pk
+    * column, duplicated pk-value groups, and rows whose `nullIn`
+    * column is NULL (0 when none was asked for). */
+  final case class PkStats(rows: Long, nullPk: Long, dupPk: Long,
+                           nullIn: Long)
+
+  /** Fused PK integrity stats in ONE job. The separate formulation
+    * costs two passes over the frame — a scan-aggregate for count+null
+    * and a groupBy for dups; this derives all of them from the single
+    * groupBy(pk) the dup check needs anyway (partial aggregation
+    * collapses unique pks map-side, so the exchange carries ~one row
+    * per key either way, and a frame already distributed by the pk
+    * needs none). `nullIn` adds one more column's NULL count to the
+    * same pass. Callers raise in their own contract order — computing
+    * the numbers together does not reorder the gate failure priority. */
+  def pkIntegrityStats(df: DataFrame, pk: Seq[String],
+                       nullIn: Option[String] = None): PkStats = {
     val nullPred = pk.map(col(_).isNull).reduce(_ || _)
-    val row = df.groupBy(pk.map(col): _*).agg(count(lit(1)).as("_n"))
+    val nullInCount = nullIn.map(c => count(when(col(c).isNull, 1)))
+      .getOrElse(lit(0L))
+    val row = df.groupBy(pk.map(col): _*)
+      .agg(count(lit(1)).as("_n"), nullInCount.as("_n_null_in"))
       .agg(coalesce(sum(col("_n")), lit(0L)).as("n"),
         coalesce(sum(when(nullPred, col("_n"))), lit(0L)).as("n_null"),
-        count(when(col("_n") > 1, 1)).as("n_dup_groups"))
+        count(when(col("_n") > 1, 1)).as("n_dup_groups"),
+        coalesce(sum(col("_n_null_in")), lit(0L)).as("n_null_in"))
       .first()
-    (row.getLong(0), row.getLong(1), row.getLong(2))
+    PkStats(row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
+  }
+
+  /** The NULL-PK then duplicate-PK raises over [[pkIntegrityStats]],
+    * shared by the T2 gate and post-load validation
+    * (transform_data_modeling.py:312-335, etl/load.py:144-210). */
+  def requirePkIntegrity(s: PkStats, pk: Seq[String]): Unit = {
+    if (s.nullPk > 0)
+      throw new DataQualityException(s"${s.nullPk} rows with NULL in PK $pk")
+    if (s.dupPk > 0)
+      throw new DataQualityException(s"${s.dupPk} duplicated PK values for $pk")
   }
 
   /** T2 gate: no NULL primary-key values

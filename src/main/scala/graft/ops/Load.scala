@@ -31,14 +31,17 @@ object Load {
     * instead of inheriting the upstream shuffle's partition count —
     * small dims become one file, large facts keep write parallelism.
     * Periodic [[compact]] (1M-row default) consolidates further once a
-    * table stops changing. */
+    * table stops changing.
+    *
+    * The coalesce is unconditional: it never adds partitions, and
+    * asking the frame for its partition count (`df.rdd`) would plan a
+    * second query and, under adaptive execution, run its shuffle map
+    * stages before the write runs them again. */
   def fullRefresh(df: DataFrame, path: String, nRows: Long = -1L): Unit = {
     val sized =
       if (nRows < 0) df
-      else {
-        val parts = math.max(1L, math.min(nRows / 100000L + 1, 10000L)).toInt
-        if (parts < df.rdd.getNumPartitions) df.coalesce(parts) else df
-      }
+      else df.coalesce(
+        math.max(1L, math.min(nRows / 100000L + 1, 10000L)).toInt)
     sized.write.mode("overwrite").parquet(path)
   }
 
@@ -50,16 +53,11 @@ object Load {
     val loaded = spark.read.parquet(path)
     // one pass: row count + NULL-PK count + dup-PK groups (a single
     // groupBy(pk) job; see Gates.pkIntegrityStats)
-    val (n, nNullPk, nDupPk) = Gates.pkIntegrityStats(loaded, pk)
-    if (n != expectedCount)
+    val stats = Gates.pkIntegrityStats(loaded, pk)
+    if (stats.rows != expectedCount)
       throw new DataQualityException(
-        s"loaded count $n != source count $expectedCount")
-    if (nNullPk > 0)
-      throw new DataQualityException(
-        s"$nNullPk rows with NULL in PK $pk")
-    if (nDupPk > 0)
-      throw new DataQualityException(
-        s"$nDupPk duplicated PK values for $pk")
+        s"loaded count ${stats.rows} != source count $expectedCount")
+    Gates.requirePkIntegrity(stats, pk)
   }
 
   /** Incremental (watermark) load — the strategy the reference's

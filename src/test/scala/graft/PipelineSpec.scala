@@ -78,6 +78,47 @@ class PipelineSpec extends SparkSpec {
     assert(runLog.filter(col("status") === "FAILED").count() == 3)
   }
 
+  test("a source with mostly NULL PKs loads, logs and gates like a clean " +
+      "one") {
+    // 60% of customer_id NULL: they pass the 95% null gate, all hash to
+    // one partition of the staged exchange, and T1 drops them
+    val src = RetailQueries.customers(spark, sf0001).withColumn(
+      "customer_id", when(col("customer_id").cast("long") % 5 < 3, lit(null))
+        .otherwise(col("customer_id")))
+    val n = src.count()
+    val kept = src.filter(col("customer_id").isNotNull)
+      .select("customer_id").as[String].collect().sorted.toSeq
+    assert(kept.size * 2 < n)
+    val (p, wh, logs) = newPipeline()
+    p.run("customers", src)
+    assert(spark.read.parquet(s"$wh/customers_dim").select("customer_id")
+      .as[String].collect().sorted.toSeq == kept)
+    val k = kept.size.toLong
+    val stages = spark.read.json(s"$logs/etl_stage_log.jsonl")
+      .select("stage_name", "status", "rows_in", "rows_out")
+      .as[(String, String, Long, Long)].collect().toSeq
+    assert(stages == Seq(
+      ("EXTRACT", "STARTED", -1L, -1L), ("EXTRACT", "SUCCESS", -1L, n),
+      ("TRANSFORM_P1", "STARTED", n, -1L), ("TRANSFORM_P1", "SUCCESS", n, k),
+      ("TRANSFORM_P2", "STARTED", k, -1L), ("TRANSFORM_P2", "SUCCESS", k, k),
+      ("LOAD", "STARTED", k, -1L), ("LOAD", "SUCCESS", k, k)))
+    // full-row duplicates among the NULL-PK rows still fail EXTRACT
+    val e1 = intercept[DataQualityException] {
+      p.run("customers",
+        src.unionByName(src.filter(col("customer_id").isNull).limit(3)))
+    }
+    assert(e1.getMessage.contains("duplicate full rows"), e1.getMessage)
+    // and a PK above the NULL threshold fails before the dup check
+    val mostly = src.withColumn("customer_id",
+      when(col("customer_id").cast("long") % 50 =!= 0, lit(null))
+        .otherwise(col("customer_id")))
+    val e2 = intercept[DataQualityException] {
+      p.run("customers", mostly.unionByName(mostly.limit(2)))
+    }
+    assert(e2.getMessage.contains("customer_id") &&
+      e2.getMessage.contains("NULLs"), e2.getMessage)
+  }
+
   test("full refresh is idempotent: re-running replaces, not appends") {
     val (p, wh, _) = newPipeline()
     p.run("products", RetailQueries.products(spark, sf0001))

@@ -98,6 +98,31 @@ class CleanGatesSpec extends SparkSpec {
     assert(e3.getMessage.contains("duplicate full rows"), e3.getMessage)
   }
 
+  test("source gate over a PK-distributed frame raises in contract order " +
+      "with the hash-only gate's messages") {
+    // the frame the pipeline stages: hash-distributed by the PK, so the
+    // gate groups by (pk, row hash) over it with no exchange
+    def staged(df: org.apache.spark.sql.DataFrame) =
+      graft.ext.Materialize.staged(df.repartition(col("k")))
+    def message(df: org.apache.spark.sql.DataFrame, pk: Seq[String]) =
+      intercept[DataQualityException] {
+        Gates.requireSourceGates(df, pk = pk)
+      }.getMessage
+    val ok = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
+    assert(Gates.requireSourceGates(staged(ok), pk = Seq("k")) == 3L)
+    val empty = ok.filter(col("k") > 99)
+    val nullsAndDups = ((1 to 96).map(_ => (Option.empty[Int], "x"))
+      ++ Seq((Some(1), "y"), (Some(1), "y"), (Some(2), "z"), (Some(3), "w")))
+      .toDF("k", "v")
+    val dup = Seq((1, "a"), (1, "a"), (2, "b")).toDF("k", "v")
+    Seq(empty -> "source is empty", nullsAndDups -> "NULLs",
+        dup -> "duplicate full rows").foreach { case (df, expected) =>
+      val got = message(staged(df), Seq("k"))
+      assert(got.contains(expected), got)
+      assert(got == message(df, Nil))
+    }
+  }
+
   test("gates: null or duplicate PKs fail") {
     val nulls = Seq(Some(1), None).toDF("pk")
     assertThrows[DataQualityException] {
