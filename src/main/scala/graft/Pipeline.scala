@@ -21,12 +21,12 @@ import graft.schema.Contracts
   * hash-distributes the source by its primary key once
   * ([[graft.ext.Materialize.staged]]), and everything after reads that
   * shuffle. The EXTRACT gate groups by (PK, row hash) and T1's
-  * keep-first dedup groups by the PK, neither with an exchange of its
-  * own, and each skips the map stage the staging ran, so the source is
-  * scanned once. Only T1's output is cached (its count is the row
-  * accounting, and it stays distributed by the PK); T2's model is a
-  * narrow projection over that cache, so the T2 integrity aggregate
-  * plans no exchange either.
+  * keep-first dedup is a `row_number` window partitioned by the PK,
+  * neither with an exchange of its own, and each skips the map stage
+  * the staging ran, so the source is scanned once. Only T1's output is
+  * cached (its count is the row accounting, and it stays distributed
+  * by the PK); T2's model is a narrow projection over that cache, so
+  * the T2 integrity aggregate plans no exchange either.
   *
   * Limit: rows with a NULL PK all hash to one partition of the staged
   * exchange, so a source whose PK is mostly NULL runs its EXTRACT gate
@@ -80,7 +80,7 @@ class Pipeline(spark: SparkSession, warehouseDir: String, logDir: String,
       // TRANSFORM_P1 — clean, on the staged shuffle (the rename is the
       // identity here: the schema gate admitted only contract names)
       val (cleaned, nClean) = stage(runId, "TRANSFORM_P1", nIn) {
-        val c = Clean.cleanDistributed(extracted, pk,
+        val c = Clean.clean(extracted, pk,
           Contracts.StringDefaults(table), Contracts.NumericDefaults(table),
           Contracts.DeclaredTypes(table), dedupOrder).cache()
         cachedClean = c

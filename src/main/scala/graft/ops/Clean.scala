@@ -54,38 +54,27 @@ object Clean {
     df.withColumn(OrdinalCol, monotonically_increasing_id())
 
   /** D2: drop PK duplicates keeping the first occurrence by the given
-    * explicit order column (etl/transform_data_cleaning.py:100-119).
+    * explicit order (etl/transform_data_cleaning.py:100-119).
     * Deterministic alternative to dropDuplicates (which keeps an
     * arbitrary row).
     *
-    * Shape: a keep-first AGGREGATE, not a row_number window — the
-    * window form sorts every partition by (pk, order) on both sides of
-    * the exchange; an aggregate hash-combines map-side, so the shuffle
-    * carries ~one row per key. The specific aggregate is graft's
-    * [[graft.functions.KeepFirstByOrder]] (typed-imperative, so it
-    * plans as an ObjectHashAggregate) rather than `min_by`, whose
-    * struct buffer forces a SortAggregate that re-sorts every row —
-    * measured ~2x of the whole clean stage. The order is wrapped in a
-    * struct so a NULL order value compares NULLS-FIRST exactly like
-    * the window's default ascending order (a bare null ordering key
-    * would be SKIPPED — different semantics). */
-  def dedupKeepFirst(df: DataFrame, pk: Seq[String], order: Column): DataFrame = {
-    // aggregate state per group is ~one full row (order+payload copy);
-    // size the object-hash fallback threshold so the per-task map stays
-    // memory-bounded at ANY row width (see Tuning's caveats)
-    val stateWidth =
-      df.schema.map(_.dataType.defaultSize.toLong).sum + 16L
-    graft.functions.Tuning.sizeObjectHashAggregate(df.sparkSession, stateWidth)
-    // the PK comes out as the grouping attribute itself, so a frame
-    // hash-distributed by the PK stays so (a PK re-read out of the
-    // payload struct would be a new attribute, and the next groupBy(pk)
-    // would plan another exchange); the payload holds the rest
-    val payload = struct(df.columns.filterNot(pk.contains).map(col): _*)
-    df.groupBy(pk.map(col): _*)
-      .agg(graft.functions.KeepFirst.keepFirst(struct(order), payload)
-        .as("_graft_row"))
-      .select(df.columns.map(c =>
-        if (pk.contains(c)) col(c) else col(s"_graft_row.$c").as(c)): _*)
+    * Shape: a stock `row_number` window over `pk`, keeping row 1. T1's
+    * input is already hash-distributed by the PK (the exchange
+    * [[graft.Pipeline]] stages in EXTRACT), so the window plans no
+    * exchange: one sort per partition and the window. Over an
+    * undistributed frame Spark plans a partial `WindowGroupLimit`
+    * before the exchange, so the shuffle carries at most one row per
+    * key per map task.
+    *
+    * Semantics: order columns sort ascending, NULLS FIRST, so a NULL
+    * order value is the first occurrence. Rows that tie on the whole
+    * order keep whichever the sort meets first (callers needing total
+    * determinism pass a total order, e.g. the file ordinal). */
+  def dedupKeepFirst(df: DataFrame, pk: Seq[String], order: Column*): DataFrame = {
+    val w = Window.partitionBy(pk.map(col): _*)
+      .orderBy(order.map(_.asc_nulls_first): _*)
+    df.withColumn("_graft_rn", row_number().over(w))
+      .filter(col("_graft_rn") === 1).drop("_graft_rn")
   }
 
   /** P5: cast every declared column to its declared type
@@ -99,62 +88,33 @@ object Clean {
 
   /** Full T1 stage in the reference's order
     * (etl/transform_data_cleaning.py:146-179):
-    * rename -> drop null PK -> fill defaults -> dedup keep-first -> cast.
+    * drop null PK -> fill defaults -> dedup keep-first -> cast.
+    *
+    * Takes the frame [[graft.Pipeline]] stages once in EXTRACT: renamed,
+    * carrying [[OrdinalCol]], and hash-distributed by `pk`. Plans no
+    * exchange of its own: the null-PK drop, fills, keep-first dedup and
+    * casts all run on that distribution, and the output is still
+    * distributed by `pk` (the window passes the PK through and the
+    * casts leave an already-declared PK type alone), so a later
+    * `groupBy(pk)` over it or over a cache of it needs no exchange
+    * either.
     *
     * `dedupOrder`: explicit deterministic keep-"first" order; None means
     * file order via the read ordinal (the reference's semantics, which
     * no replayable oracle can express — callers that need cross-engine
-    * determinism pass a total order instead).
-    *
-    * Standalone form over a raw frame: it renames, attaches the ordinal
-    * and distributes by the PK itself, then runs [[cleanDistributed]].
-    * [[graft.Pipeline]] calls [[cleanDistributed]] directly on the
-    * frame its EXTRACT stage already distributed, so T1 neither
-    * re-scans the source nor shuffles it again. */
+    * determinism pass a total order instead). With an explicit order
+    * the ordinal leaves before the dedup, so the sort never carries
+    * it. */
   def clean(df: DataFrame, pk: Seq[String],
             stringDefaults: Map[String, String],
             numericDefaults: Map[String, Double],
             declared: Map[String, DataType],
             dedupOrder: Option[Seq[Column]] = None): DataFrame = {
-    // ordinal attaches after the rename (normalizeName would strip the
-    // marker's leading underscore)
-    val renamed = withOrdinal(renameSnakeCase(df))
-    // Distribute by the dedup key BEFORE the per-row work: the
-    // keep-first aggregate requires exactly this hash distribution, so
-    // this is the SAME single shuffle the plan would contain anyway,
-    // moved earlier — fills, struct assembly and the partial-aggregate
-    // row copies then run at full cluster parallelism instead of at
-    // the scan's parallelism. The distinction is invisible when the
-    // scan already has many splits (the 100 TB case) and decisive when
-    // it has few (a small or single-row-group file: the whole map side
-    // would otherwise run on one core). The ordinal is attached above,
-    // before the exchange, so file-order keep-first semantics are
-    // untouched by the redistribution.
-    val distributed = dropNullPk(renamed, pk).repartition(pk.map(col): _*)
-    cleanDistributed(distributed, pk, stringDefaults, numericDefaults,
-      declared, dedupOrder)
-  }
-
-  /** T1 after the rename, over a frame that already carries
-    * [[OrdinalCol]] and is hash-distributed by `pk` — the shape
-    * [[graft.Pipeline]] stages once in EXTRACT. Plans no exchange of
-    * its own: the null-PK drop, fills, keep-first dedup and casts all
-    * run on that distribution, and the output is still distributed by
-    * `pk` (the dedup keeps the PK as its grouping attribute and the
-    * casts leave an already-declared PK type alone), so a later
-    * `groupBy(pk)` over it or over a cache of it needs no exchange
-    * either. With an explicit `dedupOrder` the ordinal leaves before
-    * the dedup, so the aggregate state never carries it. */
-  def cleanDistributed(df: DataFrame, pk: Seq[String],
-                       stringDefaults: Map[String, String],
-                       numericDefaults: Map[String, Double],
-                       declared: Map[String, DataType],
-                       dedupOrder: Option[Seq[Column]] = None): DataFrame = {
     val filled = fillDefaults(dropNullPk(df, pk), stringDefaults,
       numericDefaults)
     val deduped = dedupOrder match {
       case Some(order) =>
-        dedupKeepFirst(filled.drop(OrdinalCol), pk, struct(order: _*))
+        dedupKeepFirst(filled.drop(OrdinalCol), pk, order: _*)
       case None =>
         dedupKeepFirst(filled, pk, col(OrdinalCol)).drop(OrdinalCol)
     }

@@ -100,16 +100,14 @@ object Extract {
 
   /** Full extract stage: precheck, read, then the reference's sanity
     * gates in its eager order (etl/extract.py:138-175):
-    * schema match -> non-empty -> null-fraction -> full-row dups.
+    * schema match -> non-empty -> null-fraction -> full-row dups, the
+    * last three from one job ([[Gates.requireSourceGates]]).
     * Returns (frame, rowCount). */
   def extractCsv(spark: SparkSession, path: String, schema: StructType,
                  expectedColumns: Seq[String]): (DataFrame, Long) = {
     precheckSource(path)
     val df = readCsv(spark, path, schema)
     Gates.requireSchemaMatch(df, expectedColumns)
-    val n = Gates.requireNonEmpty(df)
-    Gates.requireMaxNullPct(df)
-    Gates.requireNoFullRowDups(df)
-    (df, n)
+    (df, Gates.requireSourceGates(df))
   }
 }

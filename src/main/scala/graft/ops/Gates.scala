@@ -31,30 +31,6 @@ object Gates {
     }
   }
 
-  /** Empty-source gate (etl/extract.py:105-108). */
-  def requireNonEmpty(df: DataFrame): Long = {
-    val n = df.count()
-    if (n == 0) throw new DataQualityException("source is empty")
-    n
-  }
-
-  /** A1: per-column NULL percentage must be <= maxPct
-    * (etl/extract.py:111-120). One aggregation job for all columns
-    * (partial aggregates map-side; no wide shuffle). */
-  def requireMaxNullPct(df: DataFrame,
-                        maxPct: Double = Contracts.MaxNullPct): Unit = {
-    val aggs = df.columns.map(c =>
-      avg(col(c).isNull.cast("double")).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    val bad = df.columns.zipWithIndex.collect {
-      case (c, i) if !row.isNullAt(i) && row.getDouble(i) * 100 > maxPct =>
-        f"$c=${row.getDouble(i) * 100}%.1f%%"
-    }
-    if (bad.nonEmpty)
-      throw new DataQualityException(
-        s"columns exceed $maxPct% NULLs: ${bad.mkString(", ")}")
-  }
-
   /** D1: zero fully-identical rows allowed; error carries a 5-row sample
     * (etl/extract.py:123-132). Implemented as a hash aggregate over all
     * columns — the groupBy keys are the whole row, so Catalyst plans a
@@ -91,37 +67,17 @@ object Gates {
     }
   }
 
-  /** Fused extract gate: ONE aggregation job computes the row count and
-    * every column's NULL fraction (A1+A2); raises on empty input or any
-    * column above maxPct. Returns the row count. */
-  def requireSourceStats(df: DataFrame,
-                         maxPct: Double = Contracts.MaxNullPct): Long = {
-    val aggs = count(lit(1)).as("_n") +:
-      df.columns.map(c => avg(col(c).isNull.cast("double")).as(c)).toSeq
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    val n = row.getLong(0)
-    if (n == 0) throw new DataQualityException("source is empty")
-    val bad = df.columns.zipWithIndex.collect {
-      case (c, i) if !row.isNullAt(i + 1) && row.getDouble(i + 1) * 100 > maxPct =>
-        f"$c=${row.getDouble(i + 1) * 100}%.1f%%"
-    }
-    if (bad.nonEmpty)
-      throw new DataQualityException(
-        s"columns exceed $maxPct% NULLs: ${bad.mkString(", ")}")
-    n
-  }
-
   /** Fully fused EXTRACT gate: row count, every column's NULL
     * fraction, AND the duplicate-row candidate count from ONE job —
     * the groupBy on the 8-byte row hash that the dup check needs
     * anyway also carries per-column null sums (identical rows share a
     * null pattern, and partial aggregation collapses them map-side, so
-    * the exchange stays ~one narrow row per distinct row). The
-    * separate formulation ([[requireSourceStats]] +
-    * [[requireNoFullRowDups]]) costs two full source scans; this costs
-    * one on clean data, falling back to the exact hash-collision
-    * confirm pass only when candidates exist. Raise order is the
-    * contract order: empty, null-pct, dups. Returns the row count.
+    * the exchange stays ~one narrow row per distinct row). One source
+    * scan on clean data, falling back to the exact hash-collision
+    * confirm pass ([[requireNoFullRowDups]]) only when candidates
+    * exist. Raise order is the contract order (etl/extract.py:105-132):
+    * empty, null-pct (a column above `maxPct`, strictly), dups.
+    * Returns the row count.
     *
     * With `pk` given the groups are `(pk, row hash)` instead: identical
     * rows share a PK, so every duplicate still lands in one group (the
@@ -197,23 +153,6 @@ object Gates {
       throw new DataQualityException(s"${s.nullPk} rows with NULL in PK $pk")
     if (s.dupPk > 0)
       throw new DataQualityException(s"${s.dupPk} duplicated PK values for $pk")
-  }
-
-  /** T2 gate: no NULL primary-key values
-    * (transform_data_modeling.py:312-321; also post-load A5). */
-  def requireNoNullPk(df: DataFrame, pk: Seq[String]): Unit = {
-    val n = df.filter(pk.map(col(_).isNull).reduce(_ || _)).count()
-    if (n > 0)
-      throw new DataQualityException(s"$n rows with NULL in PK $pk")
-  }
-
-  /** T2 gate: no duplicate primary keys
-    * (transform_data_modeling.py:326-335; also post-load D3/A4). */
-  def requireNoDupPk(df: DataFrame, pk: Seq[String]): Unit = {
-    val n = df.groupBy(pk.map(col): _*).count()
-      .filter(col("count") > 1).count()
-    if (n > 0)
-      throw new DataQualityException(s"$n duplicated PK values for $pk")
   }
 
   /** T2 gate: modeling must preserve row count

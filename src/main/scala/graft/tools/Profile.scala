@@ -26,10 +26,12 @@ import graft.FullOutput
   *    `spark.graft.spreadMaxBytes=0`); ambient load and JIT state hit
   *    both arms alike. Min/median per arm;
   *  - per arm, its last rep's layer counters from a [[TaskTally]]:
-  *    jobs, stages, tasks, executor run/CPU/GC time, input (scans
-  *    and cached-block reads), shuffle read/write, spill, and the
-  *    heaviest stages, each with its own input and shuffle read, so
-  *    a second scan of a source shows as a second stage with input;
+  *    jobs, stages, tasks, executor run/CPU/GC time, input bytes and
+  *    records (scans and cached-block reads; a parquet scan can report
+  *    ~0 bytes but still counts its records), shuffle read/write,
+  *    spill, and the heaviest stages, each with its own input and
+  *    shuffle read, so a second scan of a source shows as a second
+  *    stage with input;
   *  - that rep's final post-AQE plan, taken from the noop write's own
   *    QueryExecution. A plan read off the DataFrame after some other
   *    action was never executed (`isFinalPlan=false`). */
@@ -134,7 +136,7 @@ object Profile {
       println(f"$p layers: jobs=${l.jobs} stages=${l.stages} " +
         f"tasks=${l.tasks} executor_run_s=${l.taskSec}%.2f " +
         f"cpu_s=${l.cpuSec}%.2f gc_s=${l.gcSec}%.2f " +
-        f"input_mb=${mb(l.input)}%.2f " +
+        f"input_mb=${mb(l.input)}%.2f input_records=${l.inputRecords} " +
         f"shuffle_read_mb=${mb(l.shuffleRead)}%.2f " +
         f"shuffle_write_mb=${mb(l.shuffleWrite)}%.2f " +
         f"spill_mb=${mb(l.spill)}%.2f")
@@ -142,6 +144,7 @@ object Profile {
         println(f"[stage] id=$id%-4d tasks=${s.tasks}%-4d " +
           f"run_s=${s.taskSec}%7.2f max_task_s=${maxMs / 1e3}%6.2f " +
           f"input_mb=${mb(s.input)}%8.2f " +
+          f"input_records=${s.inputRecords}%-9d " +
           f"shuffle_read_mb=${mb(s.shuffleRead)}%8.2f " +
           f"shuffle_write_mb=${mb(s.shuffleWrite)}%8.2f")
       }

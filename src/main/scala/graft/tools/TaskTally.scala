@@ -13,20 +13,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * tasks actually consumed — the contamination-proof statistic: a
   * foreign process stealing cores stretches wall but cannot add to
   * OUR tasks' cpu time, so probe runs of the same plan over the same
-  * data must agree on it. */
+  * data must agree on it. `input`/`inputRecords` are the tasks' input
+  * metrics (source scans and cached-block reads, where a record is one
+  * cached batch); a parquet scan can report ~0 bytes read, so its
+  * records are the signal that it ran. */
 final case class TaskSnap(runMs: Long, cpuNs: Long, input: Long,
                           shuffleRead: Long, shuffleWrite: Long,
                           gcMs: Long = 0L, spill: Long = 0L,
                           tasks: Long = 0L, stages: Long = 0L,
-                          jobs: Long = 0L) {
+                          jobs: Long = 0L, inputRecords: Long = 0L) {
   def minus(o: TaskSnap): TaskSnap = TaskSnap(runMs - o.runMs,
     cpuNs - o.cpuNs, input - o.input, shuffleRead - o.shuffleRead,
     shuffleWrite - o.shuffleWrite, gcMs - o.gcMs, spill - o.spill,
-    tasks - o.tasks, stages - o.stages, jobs - o.jobs)
+    tasks - o.tasks, stages - o.stages, jobs - o.jobs,
+    inputRecords - o.inputRecords)
   def plus(o: TaskSnap): TaskSnap = TaskSnap(runMs + o.runMs,
     cpuNs + o.cpuNs, input + o.input, shuffleRead + o.shuffleRead,
     shuffleWrite + o.shuffleWrite, gcMs + o.gcMs, spill + o.spill,
-    tasks + o.tasks, stages + o.stages, jobs + o.jobs)
+    tasks + o.tasks, stages + o.stages, jobs + o.jobs,
+    inputRecords + o.inputRecords)
   def cpuSec: Double = cpuNs / 1e9
   def taskSec: Double = runMs / 1e3
   /** GC wall inside task windows (jvmGCTime — part of runMs, NOT of
@@ -82,7 +87,8 @@ final class TaskTally extends SparkListener {
       val s = TaskSnap(m.executorRunTime, m.executorCpuTime,
         m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
         m.shuffleWriteMetrics.bytesWritten, m.jvmGCTime,
-        m.memoryBytesSpilled + m.diskBytesSpilled, tasks = 1)
+        m.memoryBytesSpilled + m.diskBytesSpilled, tasks = 1,
+        inputRecords = m.inputMetrics.recordsRead)
       tasks.add((if (t.taskInfo != null) t.taskInfo.finishTime else 0L,
         t.stageId, s))
       total.updateAndGet(_.plus(s))

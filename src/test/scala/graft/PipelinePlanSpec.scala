@@ -132,7 +132,7 @@ class PipelinePlanSpec extends SparkSpec {
       "Exchange hashpartitioning(sale_id"), staging)
     val gate = plans.filter(_._2.contains("_graft_h"))
     val dedup = plans.filter { case (f, p) =>
-      f == "count" && p.contains("keepfirstbyorder") }
+      f == "count" && p.contains("row_number") }
     val pkGate = plans.filter { case (_, p) =>
       p.contains("n_dup_groups") && p.contains("InMemoryTableScan") }
     Seq("gate" -> gate, "dedup" -> dedup, "pk gate" -> pkGate).foreach {

@@ -24,6 +24,72 @@ class CleanGatesSpec extends SparkSpec {
     assert(kept.toSeq == Seq("first", "only"))
   }
 
+  test("dedupKeepFirst == min_by(payload, struct(order)) on a mixed-type frame") {
+    val df = (0 until 5000).map { i =>
+      (i % 700, s"name_${(i * 37) % 991}", i.toLong, i.toDouble / 7,
+        if (i % 11 == 0) null else s"v$i")
+    }.toDF("k", "name", "ord", "score", "nullable_str")
+    val ours = Clean.dedupKeepFirst(df, Seq("k"), col("ord"))
+    val minBy = df.groupBy(col("k"))
+      .agg(min_by(struct(df.columns.map(col): _*), struct(col("ord")))
+        .as("r"))
+      .select(df.columns.map(c => col(s"r.$c")): _*)
+    assert(ours.collect().toSet == minBy.collect().toSet)
+  }
+
+  test("dedupKeepFirst keeps each of 4096 groups' first long-string row") {
+    val df = (0 until 20000)
+      .map(i => (i % 4096, f"group_${i % 4096}%05d_payload_$i%07d", i))
+      .toDF("k", "s", "ord")
+    val out = Clean.dedupKeepFirst(df, Seq("k"), col("ord"))
+      .select(col("s")).as[String].collect()
+    assert(out.length == 4096)
+    assert(out.distinct.length == 4096, "corrupt/duplicated strings")
+    // keeper for group g is the first occurrence: i == g
+    assert(out.forall { s =>
+      val g = s.slice(6, 11).toInt
+      s == f"group_$g%05d_payload_$g%07d"
+    }, s"wrong keepers, e.g. ${out.take(3).toSeq}")
+  }
+
+  test("dedupKeepFirst sorts a NULL order value first, also in a second " +
+      "order column after a tie") {
+    val df = Seq(
+      (1, Some(5L), Some(0L), "five"),
+      (1, None, Some(0L), "null_ord"), // NULL sorts FIRST -> the keeper
+      (2, Some(2L), Some(0L), "two"),
+      (2, Some(7L), Some(0L), "seven"),
+      (3, Some(1L), Some(4L), "tie_4"),
+      (3, Some(1L), None, "tie_null"), // ties on a, NULL b -> the keeper
+      (3, Some(2L), None, "a_2")
+    ).toDF("k", "a", "b", "v")
+    val got = Clean.dedupKeepFirst(df, Seq("k"), col("a"), col("b"))
+      .select("k", "v").as[(Int, String)].collect().toMap
+    assert(got == Map(1 -> "null_ord", 2 -> "two", 3 -> "tie_null"))
+  }
+
+  test("dedupKeepFirst leaves the session's ObjectHashAggregate " +
+      "fallbackThreshold unset") {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val df = (0 until 1000).map(i => (i % 100, s"v$i", i.toLong))
+      .toDF("pk", "v", "ord")
+    assert(Clean.dedupKeepFirst(df, Seq("pk"), col("ord")).count() == 100)
+    assert(spark.conf.getAll.get(key).isEmpty)
+  }
+
+  test("dedupKeepFirst over a PK-staged frame plans a Window with no " +
+      "Exchange and no ObjectHashAggregate") {
+    val df = (0 until 1000).map(i => (i % 100, s"v$i", i.toLong))
+      .toDF("pk", "v", "ord")
+    val staged = graft.ext.Materialize.staged(df.repartition(4, col("pk")))
+    val out = Clean.dedupKeepFirst(staged, Seq("pk"), col("ord"))
+    assert(out.collect().length == 100)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("Window"), plan)
+    assert(!plan.contains("Exchange"), plan)
+    assert(!plan.contains("ObjectHashAggregate"), plan)
+  }
+
   test("clean end-to-end: rename, null-pk drop, defaults, dedup, cast") {
     val raw = Seq(
       (Some("1"), Some("x"), Some("9.5")),
@@ -31,7 +97,11 @@ class CleanGatesSpec extends SparkSpec {
       (None, Some("y"), Some("2.0")),        // null pk -> dropped
       (Some("2"), None, Some("3.0"))         // null attr -> default
     ).toDF(" Store ID ", "Store NAME", "price")
-    val out = Clean.clean(raw, Seq("store_id"),
+    // staged the way the pipeline's EXTRACT stage stages a source
+    val staged = graft.ext.Materialize.staged(
+      Clean.withOrdinal(Clean.renameSnakeCase(raw))
+        .repartition(col("store_id")))
+    val out = Clean.clean(staged, Seq("store_id"),
       Map("store_name" -> "UNKNOWN"), Map.empty,
       Map("store_id" -> StringType, "store_name" -> StringType,
         "price" -> DoubleType))
@@ -52,17 +122,21 @@ class CleanGatesSpec extends SparkSpec {
 
   test("gates: empty source fails") {
     val df = Seq(1).toDF("a").filter(col("a") > 1)
-    assertThrows[DataQualityException] { Gates.requireNonEmpty(df) }
+    val e = intercept[DataQualityException] { Gates.requireSourceGates(df) }
+    assert(e.getMessage.contains("source is empty"), e.getMessage)
   }
 
   test("gates: null fraction above threshold fails") {
     val df = (1 to 100).map(i => if (i <= 96) None else Some(i))
       .toDF("mostly_null")
-    assertThrows[DataQualityException] { Gates.requireMaxNullPct(df) }
-    // 95% exactly passes (gate is strict >)
+    val e = intercept[DataQualityException] { Gates.requireSourceGates(df) }
+    assert(e.getMessage.contains("NULLs"), e.getMessage)
+    // 95% exactly passes the null gate (it is strict >); the 95 NULL
+    // rows are full-row duplicates, so the next gate in order raises
     val ok = (1 to 100).map(i => if (i <= 95) None else Some(i))
       .toDF("mostly_null")
-    Gates.requireMaxNullPct(ok)
+    val e2 = intercept[DataQualityException] { Gates.requireSourceGates(ok) }
+    assert(e2.getMessage.contains("duplicate full rows"), e2.getMessage)
   }
 
   test("gates: full-row duplicates fail, near-duplicates pass") {
@@ -124,14 +198,15 @@ class CleanGatesSpec extends SparkSpec {
   }
 
   test("gates: null or duplicate PKs fail") {
+    def message(df: org.apache.spark.sql.DataFrame) =
+      intercept[DataQualityException] {
+        Gates.requirePkIntegrity(Gates.pkIntegrityStats(df, Seq("pk")),
+          Seq("pk"))
+      }.getMessage
     val nulls = Seq(Some(1), None).toDF("pk")
-    assertThrows[DataQualityException] {
-      Gates.requireNoNullPk(nulls, Seq("pk"))
-    }
+    assert(message(nulls) == "1 rows with NULL in PK List(pk)")
     val dups = Seq(1, 1, 2).toDF("pk")
-    assertThrows[DataQualityException] {
-      Gates.requireNoDupPk(dups, Seq("pk"))
-    }
+    assert(message(dups) == "1 duplicated PK values for List(pk)")
   }
 
   test("gates: contract schema enforces snake_case") {
