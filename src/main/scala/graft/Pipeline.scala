@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.control.ControlPlane
 import graft.control.ControlPlane.{LogSink, RunLog, StageLog}
 import graft.ext.Materialize
 import graft.ops.{Clean, Gates, Load, Model}
@@ -16,17 +15,17 @@ import graft.schema.Contracts
   * sales) -> LOAD with post-load validation, with run/stage logging and
   * per-stage row accounting.
   *
-  * Stage boundaries are the only forced actions (SURVEY §3.1). One
-  * exchange per pipeline: EXTRACT attaches the file-order ordinal and
-  * hash-distributes the source by its primary key once
-  * ([[graft.ext.Materialize.staged]]), and everything after reads that
-  * shuffle. The EXTRACT gate groups by (PK, row hash) and T1's
-  * keep-first dedup is a `row_number` window partitioned by the PK,
-  * neither with an exchange of its own, and each skips the map stage
-  * the staging ran, so the source is scanned once. Only T1's output is
-  * cached (its count is the row accounting, and it stays distributed
-  * by the PK); T2's model is a narrow projection over that cache, so
-  * the T2 integrity aggregate plans no exchange either.
+  * One exchange and one write per pipeline: EXTRACT hash-distributes
+  * the source by its primary key once ([[graft.ext.Materialize.staged]])
+  * and gates it on that shuffle; T1's keep-first `row_number` window and
+  * T2's narrow model then run as ONE job over it, with no exchange and
+  * no cache, writing `<target>_staging` ([[graft.ops.Load.withStaging]]).
+  * Both row counts, and sales' `sale_date` range, are `Observation`s on
+  * that write, and one read-back of the staged files is T2's gate and
+  * LOAD's validation. Stage timings are thus logical: TRANSFORM_P1 holds
+  * the fused write (and T1's ANSI cast failures; the model raises none
+  * over the declared types), TRANSFORM_P2 the audit, LOAD the count/PK
+  * check and the promote.
   *
   * Limit: rows with a NULL PK all hash to one partition of the staged
   * exchange, so a source whose PK is mostly NULL runs its EXTRACT gate
@@ -56,10 +55,6 @@ class Pipeline(spark: SparkSession, warehouseDir: String, logDir: String,
     val pipelineName = s"${table}_pipeline"
     val t0 = sink.now()
     sink.logRun(RunLog(runId, pipelineName, "STARTED", t0, null, null))
-    // the T1 cache is tracked here and released in the finally below,
-    // so a gate failure cannot leak a cached frame into a long-lived
-    // session
-    var cachedClean: DataFrame = null
     try {
       val pk = Contracts.PrimaryKeys(table)
       val expected = Contracts.ExpectedColumns(table)
@@ -77,71 +72,75 @@ class Pipeline(spark: SparkSession, warehouseDir: String, logDir: String,
           pk = pk))
       }
 
-      // TRANSFORM_P1 — clean, on the staged shuffle (the rename is the
-      // identity here: the schema gate admitted only contract names)
-      val (cleaned, nClean) = stage(runId, "TRANSFORM_P1", nIn) {
-        val c = Clean.clean(extracted, pk,
-          Contracts.StringDefaults(table), Contracts.NumericDefaults(table),
-          Contracts.DeclaredTypes(table), dedupOrder).cache()
-        cachedClean = c
-        (c, c.count())
-      }
-
-      // TRANSFORM_P2 — model + integrity gate. The model is a narrow
-      // projection over T1's cache, which is still distributed by the
-      // PK, so the fused row count + NULL-PK + dup-PK (+ stores' NULL
-      // region) aggregate runs with no exchange; failures still raise
-      // in the reference's gate order
-      val (modeled, nModeled) = stage(runId, "TRANSFORM_P2", nClean) {
-        val m = table match {
-          case "customers" => Model.customersDim(cleaned, asOf)
-          case "products" => Model.productsDim(cleaned)
-          case "stores" => Model.storesDim(cleaned, metros, regionMap)
-          case "sales" => Model.salesFact(cleaned)
+      val target = s"$warehouseDir/${targetTable(table)}"
+      Load.withStaging(spark, target) { (staging, publish) =>
+        // TRANSFORM_P1 — clean -> model, written once (the rename is the
+        // identity here: the schema gate admitted only contract names)
+        val modelStats = Observation(s"model_stats_$runId")
+        val (modeled, nClean) = stage(runId, "TRANSFORM_P1", nIn) {
+          val cleanRows = Observation(s"clean_rows_$runId")
+          val cleaned = Clean.clean(extracted, pk,
+            Contracts.StringDefaults(table), Contracts.NumericDefaults(table),
+            Contracts.DeclaredTypes(table), dedupOrder)
+            .observe(cleanRows, count(lit(1)).as("n"))
+          val m = table match {
+            case "customers" => Model.customersDim(cleaned, asOf)
+            case "products" => Model.productsDim(cleaned)
+            case "stores" => Model.storesDim(cleaned, metros, regionMap)
+            case "sales" => Model.salesFact(cleaned)
+          }
+          val saleRange = if (table != "sales") Nil else Seq(
+            min(col("sale_date").cast("date")).as("lo"),
+            max(col("sale_date").cast("date")).as("hi"))
+          Load.fullRefresh(m.observe(modelStats, count(lit(1)).as("n"),
+            saleRange: _*), staging, nIn)
+          (m, cleanRows.get("n").asInstanceOf[Long])
         }
-        val region = if (table == "stores") Some("store_region") else None
-        val stats = Gates.pkIntegrityStats(m, pk, region)
-        Gates.requireRowCountPreserved(nClean, stats.rows)
-        Gates.requireContractSchema(m, Contracts.ExpectedColumns(table),
-          Contracts.DerivedColumns(table))
-        Gates.requirePkIntegrity(stats, pk)
-        // the sample of unmapped states runs only when some are
-        if (stats.nullIn > 0) Gates.requireNoUnmappedRegion(m)
-        (m, stats.rows)
-      }
 
-      // sales also derives + loads date_dim (runner/pipeline_runner.py:248-294)
-      if (table == "sales") {
-        stage(runId, "LOAD_DATE_DIM", -1) {
-          val mm = modeled.agg(
-            min(col("sale_date").cast("date")),
-            max(col("sale_date").cast("date"))).first()
-          val dd = Model.dateDim(spark, mm.getDate(0), mm.getDate(1))
+        // TRANSFORM_P2 — integrity gate over the staged files, raising in
+        // the reference's gate order
+        val (stats, nModeled) = stage(runId, "TRANSFORM_P2", nClean) {
+          val n = modelStats.get("n").asInstanceOf[Long]
+          Gates.requireRowCountPreserved(nClean, n)
+          Gates.requireContractSchema(modeled, expected,
+            Contracts.DerivedColumns(table))
+          val region = if (table == "stores") Some("store_region") else None
+          val loaded = spark.read.parquet(staging)
+          val st = Gates.pkIntegrityStats(loaded, pk, region)
+          Gates.requirePkIntegrity(st, pk)
+          // the sample of unmapped states runs only when some are
+          if (st.nullIn > 0) Gates.requireNoUnmappedRegion(loaded)
+          (st, n)
+        }
+
+        // sales also derives + loads date_dim, before sales_fact
+        // publishes (runner/pipeline_runner.py:248-294)
+        if (table == "sales") stage(runId, "LOAD_DATE_DIM", -1) {
+          val dd = Model.dateDim(spark,
+            modelStats.get("lo").asInstanceOf[java.sql.Date],
+            modelStats.get("hi").asInstanceOf[java.sql.Date])
           // the row count comes from the write itself, not a second job
           val written = Observation(s"date_dim_rows_$runId")
           Load.fullRefresh(dd.observe(written, count(lit(1)).as("n")),
             s"$warehouseDir/date_dim", 1L)
           (dd, written.get("n").asInstanceOf[Long])
         }
-      }
 
-      // LOAD + post-load validation
-      val target = targetTable(table)
-      stage(runId, "LOAD", nModeled) {
-        Load.fullRefresh(modeled, s"$warehouseDir/$target", nModeled)
-        Load.validateLoaded(spark, s"$warehouseDir/$target", pk, nModeled)
-        (modeled, nModeled)
+        // LOAD — post-load validation of the staged files, then publish
+        stage(runId, "LOAD", nModeled) {
+          Load.validateLoaded(stats, pk, nModeled)
+          publish()
+          (modeled, nModeled)
+        }
       }
 
       sink.logRun(RunLog(runId, pipelineName, "SUCCESS", t0, sink.now(), null))
-      s"$warehouseDir/$target"
+      target
     } catch {
       case e: Throwable =>
         sink.logRun(RunLog(runId, pipelineName, "FAILED", t0, sink.now(),
           e.getMessage))
         throw e
-    } finally {
-      if (cachedClean != null) cachedClean.unpersist()
     }
   }
 
@@ -151,14 +150,14 @@ class Pipeline(spark: SparkSession, warehouseDir: String, logDir: String,
   }
 
   private def stage[A](runId: String, name: String, rowsIn: Long)
-                      (body: => (DataFrame, Long)): (DataFrame, Long) = {
+                      (body: => (A, Long)): (A, Long) = {
     val t0 = sink.now()
     sink.logStage(StageLog(runId, name, "STARTED", rowsIn, -1, t0, null, null))
     try {
-      val (df, n) = body
+      val (a, n) = body
       sink.logStage(StageLog(runId, name, "SUCCESS", rowsIn, n, t0,
         sink.now(), null))
-      (df, n)
+      (a, n)
     } catch {
       case e: Throwable =>
         sink.logStage(StageLog(runId, name, "FAILED", rowsIn, -1, t0,

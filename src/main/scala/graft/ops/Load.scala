@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -36,7 +36,11 @@ object Load {
     * The coalesce is unconditional: it never adds partitions, and
     * asking the frame for its partition count (`df.rdd`) would plan a
     * second query and, under adaptive execution, run its shuffle map
-    * stages before the write runs them again. */
+    * stages before the write runs them again. `nRows` may be an upper
+    * bound: the pipeline passes its source count, as the loaded count
+    * is known only after this write (sf0.1 on local[4] writes the same
+    * files). Being narrow, the coalesce also bounds the tasks of the
+    * write's last stage. */
   def fullRefresh(df: DataFrame, path: String, nRows: Long = -1L): Unit = {
     val sized =
       if (nRows < 0) df
@@ -45,15 +49,11 @@ object Load {
     sized.write.mode("overwrite").parquet(path)
   }
 
-  /** Post-load validation (etl/load.py:144-210): loaded count equals
-    * source count, zero NULL PKs, zero duplicate PKs — run against the
-    * loaded table, in the reference's eager order. */
-  def validateLoaded(spark: SparkSession, path: String, pk: Seq[String],
+  /** Post-load validation (etl/load.py:144-210) over the loaded files'
+    * [[Gates.pkIntegrityStats]]: loaded count equals source count, zero
+    * NULL PKs, zero duplicate PKs, in the reference's eager order. */
+  def validateLoaded(stats: Gates.PkStats, pk: Seq[String],
                      expectedCount: Long): Unit = {
-    val loaded = spark.read.parquet(path)
-    // one pass: row count + NULL-PK count + dup-PK groups (a single
-    // groupBy(pk) job; see Gates.pkIntegrityStats)
-    val stats = Gates.pkIntegrityStats(loaded, pk)
     if (stats.rows != expectedCount)
       throw new DataQualityException(
         s"loaded count ${stats.rows} != source count $expectedCount")
@@ -74,9 +74,10 @@ object Load {
         df.schema(watermarkCol).dataType))
       case None => df
     }
-    batch.write.mode("append").parquet(path)
-    val mx = batch.agg(max(col(watermarkCol)).cast("string")).first()
-    if (mx.isNullAt(0)) lastValue else Some(mx.getString(0))
+    val high = Observation()
+    batch.observe(high, max(col(watermarkCol)).cast("string").as("wm"))
+      .write.mode("append").parquet(path)
+    Option(high.get("wm").asInstanceOf[String]).orElse(lastValue)
   }
 
   /** Promote `staging` to `target` without a window where the table is
@@ -109,28 +110,30 @@ object Load {
     if (hadTarget) fs.delete(old, true)
   }
 
-  /** Write-audit-publish: write to a staging dir, run the post-load
-    * validation against the STAGED data, and only then atomically
-    * promote it to the target path. A failed audit leaves the previous
-    * published data untouched — the reference's DELETE+INSERT+validate
-    * transaction, reshaped so readers never observe unvalidated rows. */
-  def writeAuditPublish(spark: SparkSession, df: DataFrame, path: String,
-                        pk: Seq[String], expectedCount: Long): Unit = {
-    val staging = path + "_staging"
-    fullRefresh(df, staging, expectedCount)
-    try validateLoaded(spark, staging, pk, expectedCount)
-    catch {
-      case e: Throwable =>
-        org.apache.hadoop.fs.FileSystem
-          .get(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(staging), true)
-        throw e
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    promote(fs, new org.apache.hadoop.fs.Path(staging),
-      new org.apache.hadoop.fs.Path(path))
+  /** Write-audit-publish: `body` gets the staging dir beside `path` and
+    * a `publish` that promotes it; it writes, audits the STAGED data,
+    * then publishes. Whatever it leaves unpublished is deleted, so a
+    * failed audit keeps the previous published data and readers never
+    * observe unvalidated rows (the reference's DELETE+INSERT+validate
+    * transaction). */
+  def withStaging(spark: SparkSession, path: String)
+                 (body: (String, () => Unit) => Unit): Unit = {
+    val staging = new org.apache.hadoop.fs.Path(path + "_staging")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try body(staging.toString,
+      () => promote(fs, staging, new org.apache.hadoop.fs.Path(path)))
+    finally fs.delete(staging, true)
   }
+
+  /** [[withStaging]] for one frame and the post-load validation. */
+  def writeAuditPublish(spark: SparkSession, df: DataFrame, path: String,
+                        pk: Seq[String], expectedCount: Long): Unit =
+    withStaging(spark, path) { (staging, publish) =>
+      fullRefresh(df, staging, expectedCount)
+      validateLoaded(Gates.pkIntegrityStats(spark.read.parquet(staging),
+        pk), pk, expectedCount)
+      publish()
+    }
 
   /** Small-file compaction: rewrite a parquet dir into right-sized
     * files (~targetRows per file) via a staging dir + atomic directory
@@ -144,12 +147,10 @@ object Load {
     val df = spark.read.parquet(path)
     val n = df.count()
     val parts = math.max(1L, math.min(n / targetRows + 1, 10000L)).toInt
-    val tmp = path + "_compacting"
-    df.coalesce(parts).write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    promote(fs, new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(path))
+    withStaging(spark, path) { (staging, publish) =>
+      df.coalesce(parts).write.mode("overwrite").parquet(staging)
+      publish()
+    }
     n
   }
 

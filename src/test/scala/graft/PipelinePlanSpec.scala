@@ -15,8 +15,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.registry.RetailQueries
 
-/** The refresh's plan shape: one source exchange per pipeline, and the
-  * gates, the dedup and the PK check all run on that shuffle. */
+/** The refresh's plan shape: one source exchange per pipeline; the
+  * EXTRACT gate and one fused clean + model write run on that shuffle,
+  * and nothing is cached. */
 class PipelinePlanSpec extends SparkSpec {
 
   /** Jobs, stages and SQL executions seen on the listener bus, plus the
@@ -78,17 +79,19 @@ class PipelinePlanSpec extends SparkSpec {
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
     spark.listenerManager.register(rec)
+    // the session is shared: start the run from an empty cache manager
+    spark.catalog.clearCache()
     try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       p.run("sales", RetailQueries.sales(spark, sf0001),
         Some(Seq(col("sale_date"), col("customer_id"), col("product_id"),
           col("store_id"), col("quantity"), col("unit_price"),
           col("discount_pct"))))
-      // the post-load validation (a parquet scan grouped by the PK) is
-      // the run's last execution; wait for the async bus to deliver it
+      // the date_dim write is the run's last execution; wait for the
+      // async bus to deliver it
       val deadline = System.nanoTime() + 30_000_000_000L
-      while (!rec.plans.asScala.exists(p => p._2.contains("n_dup_groups") &&
-          p._2.contains("FileScan")) && System.nanoTime() < deadline)
+      while (!rec.plans.asScala.exists(_._2.contains("/date_dim,")) &&
+          System.nanoTime() < deadline)
         Thread.sleep(20)
     } finally {
       prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(
@@ -124,22 +127,30 @@ class PipelinePlanSpec extends SparkSpec {
     assert(skipping >= 2, dependents)
   }
 
-  test("the EXTRACT gate, the T1 dedup and the T2 PK gate plan no " +
-      "hash exchange") {
+  test("the EXTRACT gate and the fused clean+model write plan no hash " +
+      "exchange") {
     val plans = rec.plans.asScala.toSeq
     val staging = plans.filter(_._2.contains("lineitem"))
     assert(staging.size === 1 && staging.head._2.contains(
       "Exchange hashpartitioning(sale_id"), staging)
     val gate = plans.filter(_._2.contains("_graft_h"))
-    val dedup = plans.filter { case (f, p) =>
-      f == "count" && p.contains("row_number") }
-    val pkGate = plans.filter { case (_, p) =>
-      p.contains("n_dup_groups") && p.contains("InMemoryTableScan") }
-    Seq("gate" -> gate, "dedup" -> dedup, "pk gate" -> pkGate).foreach {
-      case (what, ps) =>
-        assert(ps.nonEmpty, s"no $what execution recorded")
-        ps.foreach { case (_, p) =>
-          assert(!p.toLowerCase.contains("hashpartitioning"), s"$what:\n$p") }
-    }
+    assert(gate.nonEmpty, "no gate execution recorded")
+    // T1's dedup window, T2's model projection and the staging write
+    // are one execution
+    val fused = plans.filter(_._2.contains("row_number"))
+    assert(fused.size === 1, fused)
+    Seq("net_amount", "InsertIntoHadoopFsRelationCommand",
+      "sales_fact_staging").foreach(w =>
+      assert(fused.head._2.contains(w), s"$w:\n${fused.head._2}"))
+    (gate ++ fused).foreach { case (_, p) =>
+      assert(!p.toLowerCase.contains("hashpartitioning"), p) }
+  }
+
+  test("a run caches nothing") {
+    (rec.executions.asScala.values ++ rec.plans.asScala.map(_._2))
+      .foreach(p => assert(!p.contains("InMemoryTableScan") &&
+        !p.contains("InMemoryRelation"), p))
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
   }
 }

@@ -119,6 +119,53 @@ class PipelineSpec extends SparkSpec {
       e2.getMessage.contains("NULLs"), e2.getMessage)
   }
 
+  test("a sales run logs ten stage rows with the independently counted " +
+      "rows_in and rows_out") {
+    val (p, wh, logs) = newPipeline()
+    val src = RetailQueries.sales(spark, sf0001)
+    val n = src.count()
+    val k = src.filter(col("sale_id").isNotNull).select("sale_id")
+      .distinct().count()
+    p.run("sales", src, Some(Seq(col("sale_date"), col("customer_id"),
+      col("product_id"), col("store_id"), col("quantity"),
+      col("unit_price"), col("discount_pct"))))
+    val fact = spark.read.parquet(s"$wh/sales_fact")
+    assert(fact.count() == k)
+    val mm = fact.agg(min(col("sale_date").cast("date")),
+      max(col("sale_date").cast("date"))).first()
+    val days = mm.getDate(1).toLocalDate.toEpochDay -
+      mm.getDate(0).toLocalDate.toEpochDay + 1
+    val stages = spark.read.json(s"$logs/etl_stage_log.jsonl")
+      .select("stage_name", "status", "rows_in", "rows_out")
+      .as[(String, String, Long, Long)].collect().toSeq
+    assert(stages == Seq(
+      ("EXTRACT", "STARTED", -1L, -1L), ("EXTRACT", "SUCCESS", -1L, n),
+      ("TRANSFORM_P1", "STARTED", n, -1L), ("TRANSFORM_P1", "SUCCESS", n, k),
+      ("TRANSFORM_P2", "STARTED", k, -1L), ("TRANSFORM_P2", "SUCCESS", k, k),
+      ("LOAD_DATE_DIM", "STARTED", -1L, -1L),
+      ("LOAD_DATE_DIM", "SUCCESS", -1L, days),
+      ("LOAD", "STARTED", k, -1L), ("LOAD", "SUCCESS", k, k)))
+  }
+
+  test("a failed T2 gate leaves the published table and no staging dir") {
+    val (p, wh, logs) = newPipeline()
+    val good = RetailQueries.stores(spark, sf0001)
+    p.run("stores", good)
+    def published = spark.read.parquet(s"$wh/stores_dim").collect()
+      .map(_.toString).sorted.toSeq
+    val before = published
+    assert(before.nonEmpty)
+    val e = intercept[DataQualityException] {
+      p.run("stores", good.withColumn("state", lit("NOWHERE")))
+    }
+    assert(e.getMessage.contains("unmapped states"), e.getMessage)
+    val last = spark.read.json(s"$logs/etl_stage_log.jsonl")
+      .select("stage_name", "status").as[(String, String)].collect().last
+    assert(last == (("TRANSFORM_P2", "FAILED")))
+    assert(published == before)
+    assert(!new java.io.File(s"$wh/stores_dim_staging").exists())
+  }
+
   test("full refresh is idempotent: re-running replaces, not appends") {
     val (p, wh, _) = newPipeline()
     p.run("products", RetailQueries.products(spark, sf0001))
