@@ -101,9 +101,10 @@ object Run {
                       a: Args, text: RotatingTextLogger,
                       sessionBuilder: () => SparkSession): Int = {
     try {
-      val path = graft.registry.PipelineQueries.runTable(sessionBuilder(),
-        a.data, name, a.warehouse, a.logs)
-      text.info(runId, pipelineName, "runner", s"pipeline SUCCESS -> $path")
+      graft.registry.PipelineQueries.runTable(sessionBuilder(), a.data, name,
+        a.warehouse, a.logs)
+      text.info(runId, pipelineName, "runner",
+        s"pipeline SUCCESS -> ${a.warehouse}/${Pipeline.targetTable(name)}")
       0
     } catch {
       case e: graft.ops.DataQualityException =>

@@ -97,7 +97,10 @@ object Clean {
     * distributed by `pk` (the window passes the PK through and the
     * casts leave an already-declared PK type alone), so a later
     * `groupBy(pk)` over it or over a cache of it needs no exchange
-    * either.
+    * either. The pipeline hands it that frame under EXTRACT's
+    * dup-candidate window ([[Gates.observeDupCandidates]]), which
+    * runs on the same distribution in the same job, before the null-PK
+    * drop, so the gate counts every source row.
     *
     * `dedupOrder`: explicit deterministic keep-"first" order; None means
     * file order via the read ordinal (the reference's semantics, which

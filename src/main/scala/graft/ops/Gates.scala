@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.schema.Contracts
@@ -67,52 +68,80 @@ object Gates {
     }
   }
 
-  /** Fully fused EXTRACT gate: row count, every column's NULL
-    * fraction, AND the duplicate-row candidate count from ONE job —
-    * the groupBy on the 8-byte row hash that the dup check needs
-    * anyway also carries per-column null sums (identical rows share a
-    * null pattern, and partial aggregation collapses them map-side, so
-    * the exchange stays ~one narrow row per distinct row). One source
-    * scan on clean data, falling back to the exact hash-collision
-    * confirm pass ([[requireNoFullRowDups]]) only when candidates
-    * exist. Raise order is the contract order (etl/extract.py:105-132):
-    * empty, null-pct (a column above `maxPct`, strictly), dups.
-    * Returns the row count.
-    *
-    * With `pk` given the groups are `(pk, row hash)` instead: identical
-    * rows share a PK, so every duplicate still lands in one group (the
-    * candidates are a subset of the hash-only ones, and the exact
-    * confirm is unchanged), and a `df` already hash-distributed by the
-    * PK — the frame [[graft.Pipeline]] stages in EXTRACT — needs no
-    * exchange at all: the gate is one pass over the staged shuffle. */
-  def requireSourceGates(df: DataFrame,
-                         maxPct: Double = Contracts.MaxNullPct,
-                         pk: Seq[String] = Nil): Long = {
-    val cols = df.columns
-    val withH = df.withColumn("_graft_h", xxhash64(cols.map(col): _*))
-    val gAggs = count(lit(1)).as("_n") +:
-      cols.map(c => sum(col(c).isNull.cast("long")).as(s"_null_$c")).toSeq
-    val grouped = withH.groupBy(pk.map(col) :+ col("_graft_h"): _*)
-      .agg(gAggs.head, gAggs.tail: _*)
-    val fAggs = (coalesce(sum(col("_n")), lit(0L)).as("n") +:
-      cols.map(c =>
-        coalesce(sum(col(s"_null_$c")), lit(0L)).as(s"_null_$c")).toSeq) ++
-      Seq(count(when(col("_n") > 1, 1)).as("_n_cand"))
-    val row = grouped.agg(fAggs.head, fAggs.tail: _*).first()
-    val n = row.getLong(0)
+  /** `df` observed for its row count `n` and each column's NULL count
+    * `_null_<c>`, the values [[requireSourceStats]] gates: the
+    * pipeline observes them on its staging shuffle's map stage, so they
+    * cost no job of their own. */
+  def observeSourceStats(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs, count(lit(1)).as("n"),
+      df.columns.map(c => count(when(col(c).isNull, 1)).as(s"_null_$c")): _*)
+
+  /** The empty and null-pct raises, in the contract order
+    * (etl/extract.py:105-121), over the values [[observeSourceStats]]
+    * names: the source must have a row, and no column may be NULL in
+    * more than `maxPct` percent of them (strictly). Returns the row
+    * count. The one raise site of both source gates: the pipeline's,
+    * observed on its staging shuffle, and [[requireSourceGates]]. */
+  def requireSourceStats(stats: Map[String, Any], cols: Seq[String],
+                         maxPct: Double = Contracts.MaxNullPct): Long = {
+    val n = stats("n").asInstanceOf[Long]
     if (n == 0) throw new DataQualityException("source is empty")
-    val bad = cols.zipWithIndex.collect {
-      case (c, i) if row.getLong(i + 1) * 100.0 / n > maxPct =>
-        f"$c=${row.getLong(i + 1) * 100.0 / n}%.1f%%"
+    val bad = cols.flatMap { c =>
+      val pct = stats(s"_null_$c").asInstanceOf[Long] * 100.0 / n
+      if (pct > maxPct) Some(f"$c=$pct%.1f%%") else None
     }
     if (bad.nonEmpty)
       throw new DataQualityException(
         s"columns exceed $maxPct% NULLs: ${bad.mkString(", ")}")
+    n
+  }
+
+  /** Fully fused source gate for a frame with no PK distribution (the
+    * CSV extract): row count, every column's NULL count AND the
+    * duplicate-row candidate count from ONE job — the groupBy on the
+    * 8-byte row hash that the dup check needs anyway also carries
+    * per-column null counts (identical rows share a null pattern, and
+    * partial aggregation collapses them map-side, so the exchange stays
+    * ~one narrow row per distinct row). Raises via
+    * [[requireSourceStats]], then falls back to the exact
+    * hash-collision confirm pass ([[requireNoFullRowDups]]) only when
+    * candidates exist. Returns the row count. */
+  def requireSourceGates(df: DataFrame,
+                         maxPct: Double = Contracts.MaxNullPct): Long = {
+    val cols = df.columns.toSeq
+    val grouped = df.groupBy(xxhash64(cols.map(col): _*).as("_graft_h"))
+      .agg(count(lit(1)).as("_n"),
+        cols.map(c => count(when(col(c).isNull, 1)).as(s"_null_$c")): _*)
+    val totals = (coalesce(sum(col("_n")), lit(0L)).as("n") +:
+      cols.map(c => coalesce(sum(col(s"_null_$c")), lit(0L)).as(s"_null_$c"))) :+
+      count(when(col("_n") > 1, 1)).as("_n_cand")
+    val row = grouped.agg(totals.head, totals.tail: _*).first()
+    val stats = row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+    val n = requireSourceStats(stats, cols, maxPct)
     // dirty path only: re-derive the candidate hashes and confirm
     // exactly (a 64-bit hash WILL collide at 10^12 rows — candidates
     // are never trusted as duplicates without the exact check)
-    if (row.getLong(cols.length + 1) > 0) requireNoFullRowDups(df)
+    if (row.getAs[Long]("_n_cand") > 0) requireNoFullRowDups(df)
     n
+  }
+
+  /** D1's candidate count for a frame already hash-distributed by `pk`
+    * (the shuffle [[graft.Pipeline]] stages in EXTRACT), folded into
+    * the job that consumes it: a `count` window over `(pk, hash of
+    * cols)` beside T1's keep-first window, observed as `n_cand`, the
+    * rows whose group holds more than one (candidates only: the exact
+    * [[requireNoFullRowDups]] decides). Identical rows share a PK,
+    * so every duplicate lands in one window partition, and rows with a
+    * NULL PK group by their hash, so their dups count too. The
+    * partitioning satisfies the window's distribution, so it adds no
+    * exchange: one more sort per partition, which spills. */
+  def observeDupCandidates(df: DataFrame, pk: Seq[String],
+                           cols: Seq[String], obs: Observation): DataFrame = {
+    val w = Window.partitionBy(pk.map(col) :+ col("_graft_h"): _*)
+    df.withColumn("_graft_h", xxhash64(cols.map(col): _*))
+      .withColumn("_graft_n", count(lit(1)).over(w))
+      .observe(obs, count(when(col("_graft_n") > 1, 1)).as("n_cand"))
+      .drop("_graft_h", "_graft_n")
   }
 
   /** What [[pkIntegrityStats]] counts: rows, rows with a NULL pk
@@ -121,28 +150,31 @@ object Gates {
   final case class PkStats(rows: Long, nullPk: Long, dupPk: Long,
                            nullIn: Long)
 
-  /** Fused PK integrity stats in ONE job. The separate formulation
-    * costs two passes over the frame — a scan-aggregate for count+null
-    * and a groupBy for dups; this derives all of them from the single
-    * groupBy(pk) the dup check needs anyway (partial aggregation
-    * collapses unique pks map-side, so the exchange carries ~one row
-    * per key either way, and a frame already distributed by the pk
-    * needs none). `nullIn` adds one more column's NULL count to the
-    * same pass. Callers raise in their own contract order — computing
-    * the numbers together does not reorder the gate failure priority. */
+  /** Fused PK integrity stats from ONE grouped pass: the groupBy(pk)
+    * the dup check needs anyway (partial aggregation collapses unique
+    * pks map-side, so the exchange carries ~one row per key either way,
+    * and a frame already distributed by the pk needs none) counts each
+    * key's rows, and an `Observation` on its output totals them — no
+    * global re-aggregation job. `nullIn` adds one more column's NULL
+    * count to the same pass. Callers raise in their own contract order
+    * — computing the numbers together does not reorder the gate
+    * failure priority. */
   def pkIntegrityStats(df: DataFrame, pk: Seq[String],
                        nullIn: Option[String] = None): PkStats = {
     val nullPred = pk.map(col(_).isNull).reduce(_ || _)
     val nullInCount = nullIn.map(c => count(when(col(c).isNull, 1)))
       .getOrElse(lit(0L))
-    val row = df.groupBy(pk.map(col): _*)
+    val totals = Observation()
+    df.groupBy(pk.map(col): _*)
       .agg(count(lit(1)).as("_n"), nullInCount.as("_n_null_in"))
-      .agg(coalesce(sum(col("_n")), lit(0L)).as("n"),
+      .observe(totals, coalesce(sum(col("_n")), lit(0L)).as("n"),
         coalesce(sum(when(nullPred, col("_n"))), lit(0L)).as("n_null"),
         count(when(col("_n") > 1, 1)).as("n_dup_groups"),
         coalesce(sum(col("_n_null_in")), lit(0L)).as("n_null_in"))
-      .first()
-    PkStats(row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
+      .write.format("noop").mode("overwrite").save()
+    val t = totals.get
+    def long(k: String) = t(k).asInstanceOf[Long]
+    PkStats(long("n"), long("n_null"), long("n_dup_groups"), long("n_null_in"))
   }
 
   /** The NULL-PK then duplicate-PK raises over [[pkIntegrityStats]],

@@ -116,8 +116,8 @@ object Load {
     * failed audit keeps the previous published data and readers never
     * observe unvalidated rows (the reference's DELETE+INSERT+validate
     * transaction). */
-  def withStaging(spark: SparkSession, path: String)
-                 (body: (String, () => Unit) => Unit): Unit = {
+  def withStaging[A](spark: SparkSession, path: String)
+                    (body: (String, () => Unit) => A): A = {
     val staging = new org.apache.hadoop.fs.Path(path + "_staging")
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try body(staging.toString,
@@ -130,8 +130,8 @@ object Load {
                         pk: Seq[String], expectedCount: Long): Unit =
     withStaging(spark, path) { (staging, publish) =>
       fullRefresh(df, staging, expectedCount)
-      validateLoaded(Gates.pkIntegrityStats(spark.read.parquet(staging),
-        pk), pk, expectedCount)
+      validateLoaded(Gates.pkIntegrityStats(
+        spark.read.schema(df.schema).parquet(staging), pk), pk, expectedCount)
       publish()
     }
 

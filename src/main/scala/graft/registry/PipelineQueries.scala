@@ -52,12 +52,12 @@ object PipelineQueries {
       col("discount_pct"))) else None
 
   /** Runs `table`'s pipeline from the corpus at `dir` into warehouse
-    * `wh` with run/stage logs under `logs`, returning the loaded
-    * table's path: the one table -> source selection (and sales
-    * keep-first order) shared by the registered pipeline queries and
-    * the [[graft.Run]] CLI. */
+    * `wh` with run/stage logs under `logs`, returning the published
+    * table (read with its written schema): the one table -> source
+    * selection (and sales keep-first order) shared by the registered
+    * pipeline queries and the [[graft.Run]] CLI. */
   private[graft] def runTable(s: SparkSession, dir: String, table: String,
-                              wh: String, logs: String): String = {
+                              wh: String, logs: String): DataFrame = {
     val p = new Pipeline(s, wh, logs, AsOf,
       metros = MetroNations, regionMap = NationRegionMap)
     val source = table match {
@@ -73,8 +73,8 @@ object PipelineQueries {
                           table: String): DataFrame = {
     val base = java.nio.file.Files
       .createTempDirectory(scratchRoot(s), "run")
-    s.read.parquet(runTable(s, dir, table, base.resolve("wh").toString,
-      base.resolve("logs").toString))
+    runTable(s, dir, table, base.resolve("wh").toString,
+      base.resolve("logs").toString)
   }
 
   val queries: Map[String, Q] = Map(

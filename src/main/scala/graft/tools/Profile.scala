@@ -20,7 +20,10 @@ import graft.FullOutput
   *  - `N` timed reps per arm (default 3), each a [[FullOutput.time]]:
   *    from the query call to its FULL output in Spark's noop sink,
   *    split into `construct_s` and `output_s`, with
-  *    [[graft.Bench.repHygiene]] between reps;
+  *    [[graft.Bench.repHygiene]] between reps, and the rep's
+  *    `codegen_compiles` (Spark's `CodegenMetrics`: Janino compiles
+  *    the codegen cache missed, so a warm rep whose plan shape changed
+  *    shows a non-zero count);
   *  - with `--ab key=value`, two arms interleaved rep by rep: the conf
   *    set, and unset (a runtime conf read at query construction, e.g.
   *    `spark.graft.spreadMaxBytes=0`); ambient load and JIT state hit
@@ -37,10 +40,15 @@ import graft.FullOutput
   *    action was never executed (`isFinalPlan=false`). */
 object Profile {
 
-  /** One arm's timed reps plus its last rep's counters and plan. */
+  /** One arm's timed reps and each rep's codegen compiles, plus its
+    * last rep's counters and plan. */
   final case class Arm(name: String, reps: Seq[FullOutput.Timing],
-                       layers: TaskSnap, stages: Seq[(Int, TaskSnap, Long)],
-                       plan: SparkPlan)
+                       compiles: Seq[Long], layers: TaskSnap,
+                       stages: Seq[(Int, TaskSnap, Long)], plan: SparkPlan)
+
+  /** Janino compiles so far in this JVM. */
+  private def compiles(): Long = org.apache.spark.metrics.source
+    .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The QueryExecution of each timed noop write, keyed by its tag. */
   private final class WriteCapture extends QueryExecutionListener {
@@ -73,16 +81,19 @@ object Profile {
     spark.sparkContext.addSparkListener(tally)
     spark.listenerManager.register(capture)
 
-    // (rep, its epoch-ms window, the write's QueryExecution)
+    // (rep and its compiles, its epoch-ms window, the write's
+    // QueryExecution)
     def once(setArm: () => Unit)
-        : (FullOutput.Timing, Long, Long, QueryExecution) = {
+        : ((FullOutput.Timing, Long), Long, Long, QueryExecution) = {
       setArm()
+      val c0 = compiles()
       val w0 = System.currentTimeMillis()
       val rep = FullOutput.time(spark, name, sfDir)
       val w1 = System.currentTimeMillis()
+      val c1 = compiles()
       val qe = capture.take(rep.tag)
       graft.Bench.repHygiene(spark)
-      (rep, w0, w1, qe)
+      ((rep, c1 - c0), w0, w1, qe)
     }
 
     try {
@@ -93,7 +104,7 @@ object Profile {
       arms.map { case (arm, _) =>
         val mine = runs.collect { case (`arm`, r) => r }
         val (_, w0, w1, qe) = mine.last
-        Arm(arm, mine.map(_._1), tally.window(w0, w1),
+        Arm(arm, mine.map(_._1._1), mine.map(_._1._2), tally.window(w0, w1),
           tally.stageCosts(w0, w1), qe.executedPlan)
       }
     } finally {
@@ -125,9 +136,10 @@ object Profile {
     def mb(b: Long): Double = b / 1048576.0
     for (name <- names; arm <- profile(spark, name, sfDir, reps, ab)) {
       val p = s"[profile] $name ${arm.name}"
-      arm.reps.zipWithIndex.foreach { case (r, i) =>
+      arm.reps.zip(arm.compiles).zipWithIndex.foreach { case ((r, c), i) =>
         println(f"$p rep${i + 1} construct_s=${r.constructS}%.3f " +
-          f"output_s=${r.outputS}%.3f total_s=${r.totalS}%.3f rows=${r.rows}")
+          f"output_s=${r.outputS}%.3f total_s=${r.totalS}%.3f rows=${r.rows} " +
+          s"codegen_compiles=$c")
       }
       val ts = arm.reps.map(_.totalS).sorted
       println(f"$p min ${ts.head}%.3f / median ${ts(ts.size / 2)}%.3f s " +

@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerStageSubmitted}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -35,6 +37,9 @@ class PipelinePlanSpec extends SparkSpec {
     val executions = new ConcurrentHashMap[Long, String]
     // (action name, final executed plan)
     val plans = new ConcurrentLinkedQueue[(String, String)]
+    // each finished execution's final operator tree, partition counts
+    // aside (see [[shape]])
+    val shapes = new ConcurrentLinkedQueue[String]
 
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       val exec = Option(j.properties)
@@ -58,23 +63,42 @@ class PipelinePlanSpec extends SparkSpec {
       case _ => ()
     }
     override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
-      plans.add((f, qe.executedPlan.toString)); ()
+      plans.add((f, qe.executedPlan.toString))
+      shapes.add(shape(qe.executedPlan)); ()
     }
     override def onFailure(f: String, qe: QueryExecution,
                            e: Exception): Unit = ()
   }
 
-  /** Runs the sales pipeline at sf0.001 under a [[Recorder]], with four
-    * shuffle partitions left uncoalesced: on one partition every
+  /** An executed plan's operator tree, one node name per line, with
+    * what only a partition count changes left out: adaptive execution's
+    * wrappers and its shuffle reads (a coalesced read, or none). Whole-
+    * stage codegen boundaries stay, so two plans of one shape generate
+    * the same code. */
+  private def shape(plan: SparkPlan): String = {
+    def walk(p: SparkPlan, depth: Int): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth)
+      case q: QueryStageExec => walk(q.plan, depth)
+      case r: AQEShuffleReadExec => walk(r.child, depth)
+      case _ => ("  " * depth + p.nodeName) +:
+        p.children.flatMap(walk(_, depth + 1))
+    }
+    walk(plan, 0).mkString("\n")
+  }
+
+  /** Four shuffle partitions left uncoalesced: on one partition every
     * distribution is satisfied, and the plan shape would prove nothing. */
-  private def recordSalesRun(): Recorder = {
+  private val fourPartitions = Map("spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
+  /** Runs the sales pipeline at sf0.001 under a [[Recorder]], with
+    * `confs` set for the run. */
+  private def recordSalesRun(confs: Map[String, String]): Recorder = {
     val wh = Files.createTempDirectory("wh").toString
     val logs = Files.createTempDirectory("logs").toString
     val p = new Pipeline(spark, wh, logs, RetailQueries.AsOf,
       metros = RetailQueries.MetroNations,
       regionMap = RetailQueries.NationRegionMap)
-    val confs = Map("spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
@@ -102,7 +126,7 @@ class PipelinePlanSpec extends SparkSpec {
     rec
   }
 
-  private lazy val rec = recordSalesRun()
+  private lazy val rec = recordSalesRun(fourPartitions)
 
   test("a sales run reads lineitem in one stage, and later jobs skip " +
       "the staged shuffle's map stage") {
@@ -121,10 +145,18 @@ class PipelinePlanSpec extends SparkSpec {
     val mapRuns = dependents.flatMap(_._2).filter(_._2 == mapRdd)
       .map(_._1).distinct.count(submitted.contains)
     assert(mapRuns === 1, dependents)
-    // the EXTRACT gate and T1 both consume it without re-running it
-    val skipping = dependents.count(_._2.exists { case (id, rdd) =>
-      rdd == mapRdd && !submitted.contains(id) })
-    assert(skipping >= 2, dependents)
+    // exactly one other execution reads it, without re-running it: the
+    // fused write, which holds the dup gate's hash, T1's window and the
+    // staging write, and no exchange (its scan of the staged shuffle
+    // names the shuffle's hashpartitioning)
+    val staging = dependents.filter(_._2.exists { case (id, rdd) =>
+      rdd == mapRdd && submitted.contains(id) }).map(_._1).distinct
+    val readers = dependents.map(_._1).distinct.filterNot(staging.contains)
+    assert(readers.size === 1, dependents)
+    val plan = rec.executions.get(readers.head)
+    Seq("_graft_h", "row_number", "sales_fact_staging").foreach(w =>
+      assert(plan.contains(w), s"$w:\n$plan"))
+    assert(!plan.toLowerCase.contains("exchange"), plan)
   }
 
   test("the EXTRACT gate and the fused clean+model write plan no hash " +
@@ -133,12 +165,12 @@ class PipelinePlanSpec extends SparkSpec {
     val staging = plans.filter(_._2.contains("lineitem"))
     assert(staging.size === 1 && staging.head._2.contains(
       "Exchange hashpartitioning(sale_id"), staging)
+    // the dup gate's row hash, T1's dedup window, T2's model projection
+    // and the staging write are one execution
     val gate = plans.filter(_._2.contains("_graft_h"))
-    assert(gate.nonEmpty, "no gate execution recorded")
-    // T1's dedup window, T2's model projection and the staging write
-    // are one execution
     val fused = plans.filter(_._2.contains("row_number"))
     assert(fused.size === 1, fused)
+    assert(gate == fused, gate)
     Seq("net_amount", "InsertIntoHadoopFsRelationCommand",
       "sales_fact_staging").foreach(w =>
       assert(fused.head._2.contains(w), s"$w:\n${fused.head._2}"))
@@ -152,5 +184,21 @@ class PipelinePlanSpec extends SparkSpec {
         !p.contains("InMemoryRelation"), p))
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty)
+  }
+
+  test("a staged shuffle coalesced to one partition runs the operator " +
+      "trees of an uncoalesced one") {
+    // the benchmark warms up on a 2% corpus, whose staged shuffles
+    // coalesce to one partition; a plan shape that changed with the
+    // partition count would compile its code again in the timed run
+    val one = recordSalesRun(Map("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m"))
+    val four = recordSalesRun(fourPartitions)
+    assert(one.plans.asScala.exists(_._2.contains("coalesced")) &&
+      !four.plans.asScala.exists(_._2.contains("coalesced")))
+    val (a, b) = (one.shapes.asScala.toSeq, four.shapes.asScala.toSeq)
+    assert(a.size === b.size, s"${a.mkString("\n\n")}\n----\n${b.mkString("\n\n")}")
+    a.zip(b).foreach { case (x, y) => assert(x === y, s"\n$x\n----\n$y") }
   }
 }

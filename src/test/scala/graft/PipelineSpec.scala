@@ -166,6 +166,38 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$wh/stores_dim_staging").exists())
   }
 
+  test("a full-row duplicate outranks a failing T1 cast: EXTRACT fails, " +
+      "the published table stays and no staging dir is left") {
+    val (p, wh, logs) = newPipeline()
+    val good = RetailQueries.products(spark, sf0001)
+    p.run("products", good)
+    def published = spark.read.parquet(s"$wh/products_dim").collect()
+      .map(_.toString).sorted.toSeq
+    val before = published
+    // price arrives as text; one kept row's value fails the declared
+    // DOUBLE cast under ANSI
+    val badCast = good.withColumn("price",
+      when(col("product_id") === "7", lit("not-a-price"))
+        .otherwise(col("price").cast("string")))
+    def stageRows() = spark.read.json(s"$logs/etl_stage_log.jsonl")
+      .select("run_id", "stage_name", "status").as[(String, String, String)]
+      .collect().toSeq
+    // alone, the cast fails T1
+    intercept[Exception] { p.run("products", badCast) }
+    assert(stageRows().last._2 == "TRANSFORM_P1" &&
+      stageRows().last._3 == "FAILED", stageRows().last)
+    // with a full-row duplicate too, EXTRACT's dup gate raises first
+    val e = intercept[DataQualityException] {
+      p.run("products", badCast.unionByName(badCast.limit(1)))
+    }
+    assert(e.getMessage.contains("duplicate full rows"), e.getMessage)
+    val run = stageRows().last._1
+    assert(stageRows().filter(_._1 == run).map(r => (r._2, r._3)) ==
+      Seq(("EXTRACT", "STARTED"), ("EXTRACT", "FAILED")))
+    assert(published == before)
+    assert(!new java.io.File(s"$wh/products_dim_staging").exists())
+  }
+
   test("full refresh is idempotent: re-running replaces, not appends") {
     val (p, wh, _) = newPipeline()
     p.run("products", RetailQueries.products(spark, sf0001))

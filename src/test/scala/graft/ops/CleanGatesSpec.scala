@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -172,18 +173,32 @@ class CleanGatesSpec extends SparkSpec {
     assert(e3.getMessage.contains("duplicate full rows"), e3.getMessage)
   }
 
+  /** The source gate as [[graft.Pipeline]] runs it over its PK staging
+    * shuffle: row and NULL counts observed on the shuffle's map stage,
+    * dup candidates counted by the window in the job that consumes it
+    * (here a noop write), then the exact confirm. Returns the row
+    * count. */
+  private def stagedGate(df: DataFrame, pk: Seq[String]): Long = {
+    val stats = Observation()
+    val staged = graft.ext.Materialize.staged(
+      Gates.observeSourceStats(df, stats).repartition(pk.map(col): _*))
+    val n = Gates.requireSourceStats(stats.get, df.columns.toSeq)
+    val cands = Observation()
+    Gates.observeDupCandidates(staged, pk, df.columns.toSeq, cands)
+      .write.format("noop").mode("overwrite").save()
+    if (cands.get("n_cand").asInstanceOf[Long] > 0)
+      Gates.requireNoFullRowDups(staged)
+    n
+  }
+
+  /** A gate's verdict: its error message, or None when it passes. */
+  private def verdict(gate: => Long): Option[String] =
+    try { gate; None } catch { case e: DataQualityException => Some(e.getMessage) }
+
   test("source gate over a PK-distributed frame raises in contract order " +
       "with the hash-only gate's messages") {
-    // the frame the pipeline stages: hash-distributed by the PK, so the
-    // gate groups by (pk, row hash) over it with no exchange
-    def staged(df: org.apache.spark.sql.DataFrame) =
-      graft.ext.Materialize.staged(df.repartition(col("k")))
-    def message(df: org.apache.spark.sql.DataFrame, pk: Seq[String]) =
-      intercept[DataQualityException] {
-        Gates.requireSourceGates(df, pk = pk)
-      }.getMessage
     val ok = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
-    assert(Gates.requireSourceGates(staged(ok), pk = Seq("k")) == 3L)
+    assert(stagedGate(ok, Seq("k")) == 3L)
     val empty = ok.filter(col("k") > 99)
     val nullsAndDups = ((1 to 96).map(_ => (Option.empty[Int], "x"))
       ++ Seq((Some(1), "y"), (Some(1), "y"), (Some(2), "z"), (Some(3), "w")))
@@ -191,9 +206,37 @@ class CleanGatesSpec extends SparkSpec {
     val dup = Seq((1, "a"), (1, "a"), (2, "b")).toDF("k", "v")
     Seq(empty -> "source is empty", nullsAndDups -> "NULLs",
         dup -> "duplicate full rows").foreach { case (df, expected) =>
-      val got = message(staged(df), Seq("k"))
-      assert(got.contains(expected), got)
-      assert(got == message(df, Nil))
+      val got = verdict(stagedGate(df, Seq("k")))
+      assert(got.exists(_.contains(expected)), got)
+      assert(got == verdict(Gates.requireSourceGates(df)))
+    }
+  }
+
+  test("the in-window dup candidates reach the hash-only gate's verdict") {
+    // PK groups of 2..6 distinct rows, and the same with one exact copy
+    val groups = (0 until 300).flatMap(k =>
+      (0 until 2 + k % 5).map(j => (Option(k), s"v${k}_$j", j.toLong)))
+    val groupsDup = groups :+ groups(41)
+    // dups among NULL-PK rows, and NULL-PK rows that differ
+    val nullPk = groups ++ Seq((None, "n", 1L), (None, "n", 1L))
+    val nullPkNear = groups ++ Seq((None, "n", 1L), (None, "n", 2L))
+    // near-duplicates: one column differs (each of the two non-keys)
+    val nearA = Seq((Option(1), "a", 1L), (Option(1), "b", 1L), (Option(2), "a", 1L))
+    val nearB = Seq((Option(1), "a", 1L), (Option(1), "a", 2L), (Option(2), "a", 1L))
+    // one-key skew: 5,000 rows on one PK, with and without a copy
+    val skew = (0 until 5000).map(i => (Option(7), s"s$i", i.toLong)) ++
+      (0 until 50).map(i => (Option(i + 100), "t", 0L))
+    val skewDup = skew :+ skew(4321)
+    val frames = Seq("groups" -> groups, "groupsDup" -> groupsDup,
+      "nullPk" -> nullPk, "nullPkNear" -> nullPkNear, "nearA" -> nearA,
+      "nearB" -> nearB, "skew" -> skew, "skewDup" -> skewDup)
+    val dupFrames = Set("groupsDup", "nullPk", "skewDup")
+    frames.foreach { case (name, rows) =>
+      val df = rows.toDF("k", "a", "b")
+      val got = verdict(stagedGate(df, Seq("k")))
+      assert(got == verdict(Gates.requireSourceGates(df)), name)
+      assert(got.exists(_.contains("duplicate full rows")) ==
+        dupFrames(name), s"$name: $got")
     }
   }
 
