@@ -81,10 +81,10 @@ object Profile {
     spark.sparkContext.addSparkListener(tally)
     spark.listenerManager.register(capture)
 
-    // (rep and its compiles, its epoch-ms window, the write's
+    // (rep, its codegen compiles, its epoch-ms window, the write's
     // QueryExecution)
     def once(setArm: () => Unit)
-        : ((FullOutput.Timing, Long), Long, Long, QueryExecution) = {
+        : (FullOutput.Timing, Long, Long, Long, QueryExecution) = {
       setArm()
       val c0 = compiles()
       val w0 = System.currentTimeMillis()
@@ -93,7 +93,7 @@ object Profile {
       val c1 = compiles()
       val qe = capture.take(rep.tag)
       graft.Bench.repHygiene(spark)
-      ((rep, c1 - c0), w0, w1, qe)
+      (rep, c1 - c0, w0, w1, qe)
     }
 
     try {
@@ -103,8 +103,8 @@ object Profile {
       tally.quiesce()
       arms.map { case (arm, _) =>
         val mine = runs.collect { case (`arm`, r) => r }
-        val (_, w0, w1, qe) = mine.last
-        Arm(arm, mine.map(_._1._1), mine.map(_._1._2), tally.window(w0, w1),
+        val (_, _, w0, w1, qe) = mine.last
+        Arm(arm, mine.map(_._1), mine.map(_._2), tally.window(w0, w1),
           tally.stageCosts(w0, w1), qe.executedPlan)
       }
     } finally {
