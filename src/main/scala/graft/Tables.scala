@@ -22,18 +22,39 @@ object Tables {
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.sql.types.StructType]
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** The schema of `$dir/$name.parquet`, inferred once per snapshot
+    * (the memo above). */
+  def schema(spark: SparkSession, dir: String, name: String)
+      : org.apache.spark.sql.types.StructType = {
     val p = s"$dir/$name.parquet"
     val nanos = spark.conf
       .getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse("false")
     val fp = graft.ext.ArtifactStore.fingerprint(spark, p)
-    val sch = schemaCache.getOrElseUpdate(s"$fp|$nanos|$p",
+    schemaCache.getOrElseUpdate(s"$fp|$nanos|$p",
       spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(p)
   }
 
-  /** events table with `ts` surfaced as a microsecond TimestampType,
-    * adapting to how the corpus generator wrote the column:
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schema(spark, dir, name))
+      .parquet(s"$dir/$name.parquet")
+
+  /** A file stream over the corpus table `$dir/$name.parquet` in place:
+    * no copy is staged, and the schema comes from [[schema]]'s memo.
+    * Spark's file source gives a plain path to the reader as its
+    * `basePath`, which must be a directory, so a single-file table
+    * would fail with `Option 'basePath' must be a directory`. The path
+    * is therefore named by a glob that matches only itself
+    * (`events.parque[t]`). A glob sets no `basePath`, and it matches
+    * both a single parquet file (the test corpora, perfbench) and a
+    * Spark-written table directory ([[graft.tools.DeriveCorpus]]).
+    * The table is one file (or one directory of part files) present at
+    * start, so a bounded run reads it in its first micro-batch. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.readStream.schema(schema(spark, dir, name))
+      .parquet(s"$dir/$name.parque[t]")
+
+  /** `ts` surfaced as a microsecond TimestampType, adapting to how the
+    * corpus generator wrote the column:
     *  - TIMESTAMP(NANOS) parquet (rounds <= 9) reads as a long under
     *    `spark.sql.legacy.parquet.nanosAsLong=true` (Spark has no
     *    nanos type); `div 1000` floors to micros exactly like engines
@@ -42,15 +63,19 @@ object Tables {
     *    timestamp directly; the cast only normalizes NTZ to the
     *    session-zoned type (UTC session -> identical instants).
     * Dispatching on the READ schema keeps every downstream query
-    * byte-identical across both generator vintages. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    * byte-identical across both generator vintages. A stateless
+    * projection, so the batch read ([[events]]) and the stream read
+    * (`StreamQueries.streamSource`) share it. */
+  def withMicrosTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
     }
-  }
+
+  /** The events table, `ts` in microseconds ([[withMicrosTs]]). */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    withMicrosTs(load(spark, dir, "events"))
 
   /** lineitem -> retail `sales` source shape (FIXTURES.md §B mapping):
     * sale_id = l_orderkey-l_linenumber, l_shipdate -> sale_date,

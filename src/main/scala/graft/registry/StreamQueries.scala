@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.streaming.StreamOps
@@ -11,77 +12,75 @@ import graft.streaming.StreamOps
   * file source so the result is deterministic and oracle-checkable:
   * the streaming output must equal the equivalent batch SQL — the
   * batch/stream parity contract.
+  *
+  * Every source streams the corpus file in place ([[Tables.stream]]):
+  * nothing is copied per session. The events' ns->us `ts` conversion
+  * is a stateless projection on the stream ([[Tables.withMicrosTs]]),
+  * and the daily-increment slice of documents and embeddings is a
+  * stateless filter. The file is named by a one-file glob
+  * (`events.parque[t]`): a plain file path becomes the file source's
+  * `basePath`, which must be a directory, and the glob matches a
+  * single file and a Spark-written table directory alike. The
+  * event-time-timeout queries read [[sentinelStream]]: the events
+  * stream `unionByName` one staged sentinel row. Queries start through
+  * [[StreamOps]], which keeps the codegen cache across stream starts.
   */
 object StreamQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Staged (ns->us converted) events parquet per (session, sfDir) —
-    * written once, shared by all streaming queries in the run. */
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  /** Stage the events once per (session, sfDir) as a parquet stream
-    * source; return a fresh readStream over it. */
-  private def streamSource(s: SparkSession, dir: String): DataFrame = {
-    val events = Tables.events(s, dir)
-    val stage = staged.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_stream_src").toString
-      events.write.mode("overwrite").parquet(d)
-      // the staged copy is session-scoped scratch: reclaim it when the
-      // JVM exits instead of leaving one orphan dir per session
-      graft.ext.Scratch.reclaimOnExit(d)
-      d
-    })
-    s.readStream.schema(events.schema).parquet(stage)
-  }
-
-  /** Stage a bounded event table plus a far-future sentinel row into
-    * a fresh directory, for event-time-timeout queries (a separate
-    * copy, so the sentinel never pollutes the plain staged source).
-    * The sentinel (user_id -1) advances the final watermark past
-    * every real session's `last + gap`, so the no-data micro-batch
-    * after the last file flushes all pending event-time timers
-    * deterministically. This is honest streaming semantics: it models
-    * the stream CONTINUING past the fixture's horizon — a bounded
-    * source cannot otherwise tell the operator "no more data is
-    * coming" — not a test-only shortcut. Shared by the registry and
-    * the specs so sentinel semantics cannot drift between them. */
-  def stageWithSentinel(events: DataFrame, gapMs: Long): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_stream_sent").toString
-    events.write.mode("overwrite").parquet(d)
-    val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
-    val sentinelTs =
-      new java.sql.Timestamp(maxTs.getTime + gapMs + 3600 * 1000L)
-    // sentinel row from a template row so schema-extra columns
-    // survive; only the identifying fields are overridden
-    events.limit(1)
-      .withColumn("event_id", lit(-1L))
-      .withColumn("ts", lit(sentinelTs))
-      .withColumn("user_id", lit(-1L))
-      .withColumn("event_type", lit("sentinel"))
-      .write.mode("append").parquet(d)
-    graft.ext.Scratch.reclaimOnExit(d)
-    d
-  }
+  /** The events stream, read in place from the corpus file
+    * ([[Tables.stream]]), `ts` in microseconds ([[Tables.withMicrosTs]]). */
+  private[graft] def streamSource(s: SparkSession, dir: String): DataFrame =
+    Tables.withMicrosTs(Tables.stream(s, dir, "events"))
 
   /** One sentinel staging per (session, sfDir, gapMs) — gapMs is part
     * of the key because the sentinel's distance past max(ts) must
     * cover THIS query's gap: reusing a smaller-gap staging for a
     * larger gap would leave final sessions unflushed (timers past the
     * sentinel watermark) and silently drop output rows. */
-  private val stagedSentinel =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), String]
+  private val stagedSentinel = scala.collection.concurrent.TrieMap
+    .empty[(String, String, Long), (String, StructType)]
 
-  private def streamSourceWithSentinel(s: SparkSession, dir: String,
-                                       gapMs: Long): DataFrame = {
-    val events = Tables.events(s, dir)
-    val stage = stagedSentinel.getOrElseUpdate(
+  /** The events stream plus a far-future sentinel row, for
+    * event-time-timeout queries: [[streamSource]] `unionByName` a file
+    * stream over one staged sentinel row, so the sentinel never
+    * pollutes the plain source. The sentinel (user_id -1) advances the
+    * final watermark past every real session's `last + gap`, so the
+    * no-data micro-batch after the last file flushes all pending
+    * event-time timers deterministically. Both files are present at
+    * start, so they arrive in the same first micro-batch. This is
+    * honest streaming semantics: it models the stream CONTINUING past
+    * the fixture's horizon — a bounded source cannot otherwise tell the
+    * operator "no more data is coming" — not a test-only shortcut.
+    * Shared by the registry and the specs so sentinel semantics cannot
+    * drift between them. */
+  def sentinelStream(s: SparkSession, dir: String, gapMs: Long): DataFrame = {
+    val (d, schema) = stagedSentinel.getOrElseUpdate(
       (s.sparkContext.applicationId, dir, gapMs),
-      stageWithSentinel(events, gapMs))
-    s.readStream.schema(events.schema).parquet(stage)
+      stageSentinel(Tables.events(s, dir), gapMs))
+    streamSource(s, dir).unionByName(s.readStream.schema(schema).parquet(d))
+  }
+
+  /** Writes the one sentinel row into a fresh directory: `gapMs` plus
+    * an hour past max(ts), built from a template row so schema-extra
+    * columns survive; only the identifying fields are overridden.
+    * Returns the directory and the row's schema. */
+  private def stageSentinel(events: DataFrame,
+                            gapMs: Long): (String, StructType) = {
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_stream_sent").toString
+    val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
+    val sentinelTs =
+      new java.sql.Timestamp(maxTs.getTime + gapMs + 3600 * 1000L)
+    val row = events.limit(1)
+      .withColumn("event_id", lit(-1L))
+      .withColumn("ts", lit(sentinelTs))
+      .withColumn("user_id", lit(-1L))
+      .withColumn("event_type", lit("sentinel"))
+    row.write.mode("overwrite").parquet(d)
+    graft.ext.Scratch.reclaimOnExit(d)
+    (d, row.schema)
   }
 
   /** Shuffle/state parallelism for the registered streaming queries.
@@ -96,9 +95,7 @@ object StreamQueries {
     * 8 partitions), clamped to [2, batch width] — below 2 there is no
     * pipelining; above the batch width streaming state would be wider
     * than any shuffle feeding it. A production deployment's keyspace
-    * raises the derived width automatically; the
-    * SPARK_GRAFT_STREAM_PARTITIONS env override remains the manual
-    * escape hatch. */
+    * raises the derived width automatically. */
   val TargetKeysPerPartition = 200L
 
   /** Pure derivation, spec-pinned: partitions for a given keyspace. */
@@ -113,19 +110,15 @@ object StreamQueries {
   private val keyspace =
     scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
-  def streamParallelism(s: SparkSession, dir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse {
-        val nKeys = keyspace.getOrElseUpdate(
-          (s.sparkContext.applicationId, dir),
-          Tables.events(s, dir)
-            .select(approx_count_distinct(col("user_id")))
-            .head().getLong(0))
-        derivePartitions(nKeys,
-          s.conf.get("spark.sql.shuffle.partitions").toInt)
-      }
+  def streamParallelism(s: SparkSession, dir: String): Int = {
+    val nKeys = keyspace.getOrElseUpdate(
+      (s.sparkContext.applicationId, dir),
+      Tables.events(s, dir)
+        .select(approx_count_distinct(col("user_id")))
+        .head().getLong(0))
+    derivePartitions(nKeys,
+      s.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
 
   /** Pin shuffle.partitions (which streaming state inherits at query
     * start) for the body, restoring the session value after. */
@@ -137,8 +130,8 @@ object StreamQueries {
     try body finally s.conf.set(key, prev)
   }
 
-  /** Stage the events as a parquet stream source and run the given
-    * streaming transform to completion. */
+  /** Run the given streaming transform of the events stream to
+    * completion. */
   private def runStream(s: SparkSession, dir: String, name: String,
                         mode: OutputMode = OutputMode.Complete())
                        (mk: DataFrame => DataFrame): DataFrame =
@@ -146,51 +139,25 @@ object StreamQueries {
       StreamOps.runToMemory(mk(streamSource(s, dir)), s"graft_mem_$name", mode)
     }
 
-  /** Staged INCOMING-document stream source (`doc_id % 10 == modEq` —
-    * the modular daily-increment slice), one staging per (session,
-    * sfDir, modEq): the ingest-side twin of [[streamSource]] for the
-    * document-stream queries (the near-dup gate). */
-  private val stagedDocs =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), String]
-
-  /** Staged INCOMING-embedding stream source (`vec_id % 10 == modEq`)
-    * — the [[docStreamSource]] contract for the semantic gate. */
-  private val stagedEmb =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), String]
-
+  /** INCOMING-embedding stream source (`vec_id % 10 == modEq`), read
+    * in place — the [[docStreamSource]] contract for the semantic
+    * gate. */
   private def embStreamSource(s: SparkSession, dir: String,
-                              modEq: Int): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
+                              modEq: Int): DataFrame =
+    Tables.stream(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") % 10 === modEq)
-    val stage = stagedEmb.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir, modEq), {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft_stream_emb").toString
-        emb.write.mode("overwrite").parquet(d)
-        graft.ext.Scratch.reclaimOnExit(d)
-        d
-      })
-    s.readStream.schema(emb.schema).parquet(stage)
-  }
 
+  /** INCOMING-document stream source, read in place: the ingest-side
+    * twin of [[streamSource]] for the document-stream queries. modEq
+    * < 0 streams the FULL corpus (the ingest-gate queries); modEq >= 0
+    * is the modular daily-increment slice (`doc_id % 10 == modEq`), a
+    * stateless filter on the stream. */
   private def docStreamSource(s: SparkSession, dir: String,
                               modEq: Int): DataFrame = {
-    // modEq < 0 streams the FULL corpus (the ingest-gate queries);
-    // modEq >= 0 is the modular daily-increment slice
-    val base = Tables.load(s, dir, "documents")
+    val docs = Tables.stream(s, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val docs =
-      if (modEq >= 0) base.filter(col("doc_id") % 10 === modEq) else base
-    val stage = stagedDocs.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir, modEq), {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft_stream_docs").toString
-        docs.write.mode("overwrite").parquet(d)
-        graft.ext.Scratch.reclaimOnExit(d)
-        d
-      })
-    s.readStream.schema(docs.schema).parquet(stage)
+    if (modEq >= 0) docs.filter(col("doc_id") % 10 === modEq) else docs
   }
 
   val queries: Map[String, Q] = Map(
@@ -334,7 +301,7 @@ object StreamQueries {
     // Parity spec pins stream == Windows.cusumSeasonal(batch).
     "stream_cusum_gate" -> ((s, dir) => withStreamParallelism(s, dir) {
       val gapMs = 3600 * 1000L
-      val src = streamSourceWithSentinel(s, dir, gapMs)
+      val src = sentinelStream(s, dir, gapMs)
       // NO pre-aggregation sentinel filter: Catalyst pushes a
       // deterministic filter BELOW the EventTimeWatermark node into
       // the scan, so a filtered-out sentinel would never advance the
@@ -390,7 +357,7 @@ object StreamQueries {
     "stream_session_stateful" -> ((s, dir) => withStreamParallelism(s, dir) {
       import s.implicits._
       val gapMs = 1800 * 1000L
-      val src = streamSourceWithSentinel(s, dir, gapMs)
+      val src = sentinelStream(s, dir, gapMs)
       val sessions = StreamOps.statefulSessions(
         src.as[StreamOps.Event], gapMs)
       StreamOps.runToMemory(sessions.toDF(),
@@ -413,7 +380,7 @@ object StreamQueries {
     "stream_session_delayed" -> ((s, dir) => withStreamParallelism(s, dir) {
       import s.implicits._
       val gapMs = 1800 * 1000L
-      val src = streamSourceWithSentinel(s, dir, gapMs)
+      val src = sentinelStream(s, dir, gapMs)
       val sessions = StreamOps.statefulSessions(
         src.as[StreamOps.Event], gapMs, watermarkDelayMs = 600 * 1000L)
       StreamOps.runToMemory(sessions.toDF(),
@@ -483,7 +450,7 @@ object StreamQueries {
 
   /** Batch gap-sessionization replay shared by the delay-0 and
     * delayed sessionizer oracles (gap 30 min). The ns parquet is
-    * µs-truncated first (CAST == the staged source's `div 1000`
+    * µs-truncated first (CAST == the stream source's `div 1000`
     * floor) and the gap test is INTEGER microseconds (epoch_us),
     * exactly the sessionizer's `t - last <= gapUs`: double epoch
     * seconds carry ~0.5µs rounding error that could flip a row
@@ -674,7 +641,7 @@ object StreamQueries {
                AS BIGINT) AS version
       FROM sel""",
     // batch replay of the stream-stream interval join. The raw parquet
-    // is NANOS precision while Spark's staged source floors to µs
+    // is NANOS precision while Spark's stream source floors to µs
     // (ts div 1000), so the oracle truncates to µs TIMESTAMP first —
     // otherwise a boundary row could compare differently at ns
     // precision. Output is second-formatted (the portable form).

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming twins of the batch window operators in
   * [[graft.ext.Windows]]: tumbling/sliding event-time aggregation with
@@ -251,13 +252,12 @@ object StreamOps {
   def runUpsertSink(stream: DataFrame, path: String, keys: Seq[String],
                     checkpoint: String): DataFrame = {
     val spark = stream.sparkSession
-    val q = stream.writeStream
+    val q = start(spark, stream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         applyUpsertBatch(batch.toDF(), batchId, path, keys)
-      }
-      .start()
+      })
     q.processAllAvailable()
     q.stop()
     spark.read.parquet(path)
@@ -327,13 +327,12 @@ object StreamOps {
   def runAppendLogSink(stream: DataFrame, path: String,
                        checkpoint: String): DataFrame = {
     val spark = stream.sparkSession
-    val q = stream.writeStream
+    val q = start(spark, stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId"): Unit
-      }
-      .start()
+      })
     q.processAllAvailable()
     q.stop()
     spark.read.parquet(path)
@@ -519,15 +518,41 @@ object StreamOps {
   }
 
   /** Run a streaming query over a bounded source to completion into an
-    * in-memory table, returning the result — used by specs to assert
-    * batch/stream parity. */
+    * in-memory table, returning the result — the registered stream
+    * queries' sink, and the specs' batch/stream parity check. */
   def runToMemory(stream: DataFrame, name: String,
                   mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val spark = stream.sparkSession
-    val q = stream.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
+    val q = start(spark, stream.writeStream.outputMode(mode)
+      .format("memory").queryName(name))
     q.processAllAvailable()
     q.stop()
     spark.table(name)
+  }
+
+  /** Starts a streaming query so that its generated code reuses the
+    * codegen cache of earlier stream runs. Every sink here starts
+    * through it.
+    *
+    * `start()` clones the session, and the clone gets a new session
+    * UUID. Under `spark.sql.artifact.isolation.enabled` (on by default)
+    * the clone's jobs carry that UUID as their `JobArtifactState`, and
+    * the executor runs their tasks under a new isolated class loader.
+    * Spark 4.1 keys `CodeGenerator`'s cache by the thread's context
+    * class loader as well as the source, so every executor-side compile
+    * of every stream run missed: reps 2 and 3 of `stream_dedup`
+    * compiled the same 6 classes again, byte for byte. Isolation is
+    * therefore off while `start()` runs. The clone copies the value
+    * when it is created, and the session's own value is restored after
+    * (as `StreamQueries.withStreamParallelism` pins shuffle partitions).
+    * graft adds no session artifacts (no `addArtifact`, no `addJar`),
+    * so the shared loader loses nothing. */
+  private def start(spark: SparkSession,
+                    writer: DataStreamWriter[_]): StreamingQuery = {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, "false")
+    try writer.start()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

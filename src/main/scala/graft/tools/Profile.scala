@@ -23,7 +23,8 @@ import graft.FullOutput
   *    [[graft.Bench.repHygiene]] between reps, and the rep's
   *    `codegen_compiles` (Spark's `CodegenMetrics`: Janino compiles
   *    the codegen cache missed, so a warm rep whose plan shape changed
-  *    shows a non-zero count);
+  *    shows a non-zero count) and `codegen_ms` (the time those
+  *    compiles took, from `CodeGenerator.compileTime`);
   *  - with `--ab key=value`, two arms interleaved rep by rep: the conf
   *    set, and unset (a runtime conf read at query construction, e.g.
   *    `spark.graft.spreadMaxBytes=0`); ambient load and JIT state hit
@@ -40,15 +41,20 @@ import graft.FullOutput
   *    action was never executed (`isFinalPlan=false`). */
 object Profile {
 
-  /** One arm's timed reps and each rep's codegen compiles, plus its
-    * last rep's counters and plan. */
+  /** One arm's timed reps and each rep's codegen compiles and compile
+    * milliseconds, plus its last rep's counters and plan. */
   final case class Arm(name: String, reps: Seq[FullOutput.Timing],
-                       compiles: Seq[Long], layers: TaskSnap,
+                       compiles: Seq[Long], codegenMs: Seq[Double],
+                       layers: TaskSnap,
                        stages: Seq[(Int, TaskSnap, Long)], plan: SparkPlan)
 
   /** Janino compiles so far in this JVM. */
   private def compiles(): Long = org.apache.spark.metrics.source
     .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Nanoseconds spent in Janino compiles so far in this JVM. */
+  private def compileNs(): Long = org.apache.spark.sql.catalyst
+    .expressions.codegen.CodeGenerator.compileTime
 
   /** The QueryExecution of each timed noop write, keyed by its tag. */
   private final class WriteCapture extends QueryExecutionListener {
@@ -81,19 +87,19 @@ object Profile {
     spark.sparkContext.addSparkListener(tally)
     spark.listenerManager.register(capture)
 
-    // (rep, its codegen compiles, its epoch-ms window, the write's
-    // QueryExecution)
+    // (rep, its codegen compiles, their ms, its epoch-ms window, the
+    // write's QueryExecution)
     def once(setArm: () => Unit)
-        : (FullOutput.Timing, Long, Long, Long, QueryExecution) = {
+        : (FullOutput.Timing, Long, Double, Long, Long, QueryExecution) = {
       setArm()
-      val c0 = compiles()
+      val (c0, n0) = (compiles(), compileNs())
       val w0 = System.currentTimeMillis()
       val rep = FullOutput.time(spark, name, sfDir)
       val w1 = System.currentTimeMillis()
-      val c1 = compiles()
+      val (c1, n1) = (compiles(), compileNs())
       val qe = capture.take(rep.tag)
       graft.Bench.repHygiene(spark)
-      (rep, c1 - c0, w0, w1, qe)
+      (rep, c1 - c0, (n1 - n0) / 1e6, w0, w1, qe)
     }
 
     try {
@@ -103,9 +109,9 @@ object Profile {
       tally.quiesce()
       arms.map { case (arm, _) =>
         val mine = runs.collect { case (`arm`, r) => r }
-        val (_, _, w0, w1, qe) = mine.last
-        Arm(arm, mine.map(_._1), mine.map(_._2), tally.window(w0, w1),
-          tally.stageCosts(w0, w1), qe.executedPlan)
+        val (_, _, _, w0, w1, qe) = mine.last
+        Arm(arm, mine.map(_._1), mine.map(_._2), mine.map(_._3),
+          tally.window(w0, w1), tally.stageCosts(w0, w1), qe.executedPlan)
       }
     } finally {
       ab.foreach { case (k, _) =>
@@ -136,11 +142,12 @@ object Profile {
     def mb(b: Long): Double = b / 1048576.0
     for (name <- names; arm <- profile(spark, name, sfDir, reps, ab)) {
       val p = s"[profile] $name ${arm.name}"
-      arm.reps.zip(arm.compiles).zipWithIndex.foreach { case ((r, c), i) =>
-        println(f"$p rep${i + 1} construct_s=${r.constructS}%.3f " +
-          f"output_s=${r.outputS}%.3f total_s=${r.totalS}%.3f rows=${r.rows} " +
-          s"codegen_compiles=$c")
-      }
+      arm.reps.lazyZip(arm.compiles).lazyZip(arm.codegenMs).zipWithIndex
+        .foreach { case ((r, c, ms), i) =>
+          println(f"$p rep${i + 1} construct_s=${r.constructS}%.3f " +
+            f"output_s=${r.outputS}%.3f total_s=${r.totalS}%.3f " +
+            f"rows=${r.rows} codegen_compiles=$c codegen_ms=$ms%.1f")
+        }
       val ts = arm.reps.map(_.totalS).sorted
       println(f"$p min ${ts.head}%.3f / median ${ts(ts.size / 2)}%.3f s " +
         s"over $reps reps (1 untimed warm-up)")

@@ -184,14 +184,13 @@ class StreamOpsSpec extends SparkSpec {
 
   test("stateful sessionizer (event-time timeouts) equals batch sessionization") {
     val gapMs = 1800 * 1000L
-    // the SAME sentinel staging the registered query uses (shared
+    // the SAME sentinel source the registered query uses (shared
     // helper — sentinel semantics cannot drift between spec and
     // registry): the sentinel advances the final watermark past every
     // real session's last+gap, so the trailing no-data micro-batch
     // fires every pending event-time timer
-    val dir = graft.registry.StreamQueries.stageWithSentinel(events, gapMs)
-    val src = spark.readStream.schema(events.schema).parquet(dir)
-      .as[StreamOps.Event]
+    val src = graft.registry.StreamQueries
+      .sentinelStream(spark, sf0001, gapMs).as[StreamOps.Event]
     val streamed = StreamOps.runToMemory(
         StreamOps.statefulSessions(src, gapMs).toDF(),
         "fmgs_test", OutputMode.Append())
@@ -212,7 +211,6 @@ class StreamOpsSpec extends SparkSpec {
       .as[(Long, String, String, Long)].collect().toSeq
     assert(b.nonEmpty)
     assert(s == b, s"stream ${s.size} sessions vs batch ${b.size}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("mergeSessions folds out-of-order and bridging sessions") {
@@ -495,5 +493,97 @@ class StreamOpsSpec extends SparkSpec {
     assert(emits.forall(_._3 == 2L),
       s"expected every pair emitted exactly twice (emit, drop-within-" +
         s"state, re-emit-after-eviction); got ${emits.toSeq}")
+  }
+
+  /** Janino compiles so far in this JVM. */
+  private def compiles(): Long = org.apache.spark.metrics.source
+    .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a warm run of a registered stream query compiles nothing") {
+    // each start() clones the session; with executor class-loader
+    // isolation on, the clone's tasks run under a new class loader and
+    // miss the codegen cache (6 compiles per run of this query). A
+    // Spark upgrade that changes that behaviour fails here.
+    val q = graft.SparkEntry.queries("stream_dedup")
+    def run(): Long = {
+      val c0 = compiles()
+      q(spark, sf0001).write.format("noop").mode("overwrite").save()
+      compiles() - c0
+    }
+    run() // cold: compiles whatever this JVM has not compiled yet
+    // the counter is JVM-wide: take the least of up to three warm runs,
+    // so a sibling suite's compiles cannot fail the check
+    val warm = (1 to 3).foldLeft(Long.MaxValue)((least, _) =>
+      if (least == 0) 0 else least.min(run()))
+    assert(warm == 0, s"a warm stream_dedup run compiled $warm classes")
+  }
+
+  test("registered stream queries stream the corpus in place: no staged copies") {
+    // a fresh corpus dir, so no earlier suite's (session, dir) staging
+    // can hide a copy this test would otherwise make
+    val dir = java.nio.file.Files.createTempDirectory("graft_inplace")
+    Seq("events", "documents", "embeddings").foreach { t =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(sf0001, s"$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    }
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged(): Set[String] = tmp.list().toSet.filter(n =>
+      Seq("graft_stream_src", "graft_stream_docs", "graft_stream_emb")
+        .exists(n.startsWith))
+    val before = staged()
+    // the events, document and embedding sources
+    Seq("stream_dedup", "stream_quality_gate", "stream_semdedup_gate")
+      .foreach { n =>
+        assert(graft.SparkEntry.queries(n)(spark, dir.toString).count() > 0, n)
+      }
+    assert(staged() -- before == Set.empty[String])
+    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("a stream over a Spark-written events.parquet directory equals one over the single file") {
+    import graft.registry.StreamQueries
+    val dir = java.nio.file.Files.createTempDirectory("graft_evdir").toString
+    spark.read.parquet(s"$sf0001/events.parquet")
+      .repartition(3).write.parquet(s"$dir/events.parquet")
+    assert(new java.io.File(s"$dir/events.parquet").isDirectory)
+    def rows(d: String, name: String) = StreamOps.runToMemory(
+        StreamQueries.streamSource(spark, d), name, OutputMode.Append())
+      .orderBy("event_id").collect().toSeq
+    val fromDir = rows(dir, "evdir_test")
+    val fromFile = rows(sf0001, "evfile_test")
+    assert(fromFile.size == events.count())
+    assert(fromDir == fromFile)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a second Tables.events call starts no Spark job") {
+    // counts the jobs submitted from this thread's job group
+    def jobsDuring(f: => Any): Int = {
+      val gid = s"events-probe-${System.nanoTime()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.properties != null &&
+            gid == js.properties.getProperty("spark.jobGroup.id")) {
+            n.incrementAndGet(); ()
+          }
+      }
+      spark.sparkContext.addSparkListener(l)
+      spark.sparkContext.setJobGroup(gid, "Tables.events schema probe")
+      try {
+        f
+        Thread.sleep(1000) // listener bus is async
+        n.get()
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(l)
+      }
+    }
+    // the probe sees a schema-inference job
+    assert(jobsDuring(spark.read.parquet(s"$sf0001/events.parquet")) > 0)
+    Tables.events(spark, sf0001)
+    assert(jobsDuring(Tables.events(spark, sf0001)) == 0)
   }
 }
