@@ -31,42 +31,13 @@ object Corpus {
     * [[graft.functions.WordChunks]] expression (one codegen'd JVM
     * loop); the equivalent transform/sequence/slice HOF chain is
     * CodegenFallback and ~3x slower on the full-corpus paths (the
-    * HOF twin survives in the CorpusSpec equivalence test). */
+    * HOF twin survives as the CorpusSpec equivalence reference). */
   def chunked(df: DataFrame, id: Column, text: Column,
               segWords: Int): DataFrame =
     df.select(id.cast("long").as("doc_id"), posexplode(
         graft.functions.VectorFunctions.wordChunks(text, segWords)))
       .select(col("doc_id"), col("pos").cast("long").as("seg_idx"),
         col("col").as("seg"))
-
-  /** The Column-algebra twin of [[chunked]]'s native chopper — kept
-    * for the spec-side equivalence proof. */
-  private[ext] def chunkedHof(text: Column, segWords: Int): Column = {
-    val toks = TextOps.tokens(text)
-    // integer ceil-div; sequence(0, n-1) needs n >= 1 (Spark's
-    // sequence(0,-1) is DESCENDING, not empty — guard it)
-    val nSegs = floor((size(toks) + lit(segWords - 1)) / lit(segWords))
-      .cast("int")
-    when(nSegs >= 1,
-      transform(sequence(lit(0), nSegs - 1),
-        i => concat_ws(" ",
-          slice(toks, i * segWords + lit(1), lit(segWords)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** The Column-algebra twin of the native strided chopper
-    * ([[graft.functions.WordChunksStrided]]) — kept for the spec-side
-    * equivalence proof, like [[chunkedHof]]. */
-  private[ext] def chunkedOverlapHof(text: Column, n: Int,
-                                     stride: Int): Column = {
-    val toks = TextOps.tokens(text)
-    val nChunks = when(size(toks) <= n, lit(1))
-      .otherwise(lit(1) +
-        floor((size(toks) - lit(n) + lit(stride - 1)) / lit(stride))
-          .cast("int"))
-    transform(sequence(lit(0), nChunks - 1),
-      i => concat_ws(" ", slice(toks, i * stride + lit(1), lit(n))))
-  }
 
   /** Repeated-segment dedup ("paragraph" dedup for corpora whose unit
     * of repetition is a span, not a document): chop each document into
@@ -435,6 +406,18 @@ object Corpus {
           .as("zipf_slope_ppm"))
   }
 
+  /** The DISTINCT (doc_id, shingle) occurrence frame of the word
+    * n-shingles ([[graft.functions.WordShingleStrings]]) — the one
+    * input of the vocabulary-growth family: [[heapsBucketFit]],
+    * [[noveltyCurve]] and the staged [[PairStage.shingleSets]]
+    * artifact. */
+  def shinglePairs(df: DataFrame, id: Column, text: Column,
+                   n: Int): DataFrame =
+    df.select(id.as("doc_id"), explode(
+        graft.functions.VectorFunctions.wordShingleStrings(text, n))
+        .as("shingle"))
+      .distinct()
+
   /** Heaps-law growth exponent — vocabulary V(n) ~ C n^beta over
     * ingest order — the second client of the [[withLog2Milli]]
     * integer least-squares harness. [[noveltyCurve]] SHOWS the
@@ -458,10 +441,7 @@ object Corpus {
     * aggregates), then <=64 rows end-to-end. */
   def heapsBucketFit(df: DataFrame, id: Column, text: Column,
                      n: Int = 3): DataFrame =
-    heapsBucketFitFrom(Materialize.eager(
-      df.select(id.as("doc_id"),
-          explode(TextOps.wordShingles(text, n)).as("shingle"))
-        .distinct()))
+    heapsBucketFitFrom(Materialize.eager(shinglePairs(df, id, text, n)))
 
   /** [[heapsBucketFit]] over a pre-materialized DISTINCT (doc_id,
     * shingle) frame — the registry path reads the staged
@@ -1767,10 +1747,8 @@ object Corpus {
     * measured 6.1 -> 3.4 s median at sf0.1 (SCALE.md r16). */
   def noveltyCurve(df: DataFrame, id: Column, text: Column,
                    n: Int = 3, bucketSize: Long = 50L): DataFrame =
-    noveltyCurveFrom(Materialize.eager(
-      df.select(id.as("doc_id"),
-          explode(TextOps.wordShingles(text, n)).as("shingle"))
-        .distinct()), bucketSize)
+    noveltyCurveFrom(Materialize.eager(shinglePairs(df, id, text, n)),
+      bucketSize)
 
   /** [[noveltyCurve]] over a pre-materialized DISTINCT (doc_id,
     * shingle) frame — the registry path reads the staged

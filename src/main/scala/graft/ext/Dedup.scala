@@ -301,7 +301,7 @@ object Dedup {
   def minhashSignatures(df: DataFrame, id: Column, text: Column,
                         shingleN: Int, k: Int): DataFrame = {
     // native one-pass shingle hashing (value-identical to
-    // hex60(array_distinct(wordShingles)) but codegen'd — the
+    // hex60 over the distinct word shingles, but codegen'd — the
     // interpreted HOF chain was the dominant cost of the whole LSH
     // job). Spread first (r19): the hashing CPU is byte-dense, a
     // single-split scan serializes it.

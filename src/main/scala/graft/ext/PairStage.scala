@@ -465,11 +465,8 @@ object PairStage {
     * read by each growth report. */
   def shingleSets(spark: SparkSession, dir: String, n: Int = 3): DataFrame = {
     val a = staged(spark, "shingle_sets", Seq(docs(dir)), Seq(n)) { p =>
-      graft.Tables.load(spark, dir, "documents")
-        .select(col("doc_id"),
-          org.apache.spark.sql.functions.explode(
-            TextOps.wordShingles(col("text"), n)).as("shingle"))
-        .distinct()
+      Corpus.shinglePairs(graft.Tables.load(spark, dir, "documents"),
+          col("doc_id"), col("text"), n)
         .write.mode("overwrite").parquet(p)
     }
     readPart(spark, a)

@@ -29,12 +29,15 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Attach a unit-normalized double vector column (norm computed once
-    * per row, not per element). */
+    * per row, not per element). The norm enters the lambda as a zipped
+    * argument: a projected norm column that a lambda body references
+    * once is re-inlined into that body by CollapseProject, which costs
+    * one dot product per element (RegistryPlanLintSpec's
+    * invariant-lambda lint pins the shape). */
   def withNormalized(df: DataFrame, vec: String, out: String): DataFrame =
-    df.withColumn("_graft_norm", norm(col(vec)))
-      .withColumn(out,
-        transform(col(vec), x => x.cast("double") / col("_graft_norm")))
-      .drop("_graft_norm")
+    df.withColumn(out, zip_with(col(vec),
+      array_repeat(norm(col(vec)), size(col(vec))),
+      (x, n) => x.cast("double") / n))
 
   /** Brute-force cosine top-k: every query row against the whole
     * corpus. Both sides are unit-normalized once; the query side is
@@ -267,9 +270,8 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("d"), col("m")))).as("dm"))
         .select(col("centroid_id"),
           transform(col("dm"), e => e.getField("m")).as("mv"))
-      val renormed = means.select(col("centroid_id"),
-        transform(col("mv"), x => x / sqrt(dot(col("mv"), col("mv"))))
-          .as("new_cv"))
+      val renormed = withNormalized(means, "mv", "new_cv")
+        .select(col("centroid_id"), col("new_cv"))
       centroids = centroids.join(renormed, Seq("centroid_id"), "left")
         .select(col("centroid_id"),
           coalesce(col("new_cv"), col("cv")).as("cv"))

@@ -32,55 +32,21 @@ object TextOps {
     graft.functions.TextHashUtil.LangStopwordLists
       .toSeq.map { case (l, ws) => l -> ws.toSeq }
 
-  /** Occurrences of ` word ` in the space-padded lowered text —
-    * replace-based counting, no regex, identical semantics in any SQL
-    * engine. Matches are non-overlapping, so immediately repeated words
-    * ("the the the") count n/2 rounded up, not n — acceptable for the
-    * ratio heuristics these scores feed.
-    *
-    * This Column-algebra form is the REFERENCE implementation (and
-    * the shape the DuckDB oracle twins replay); the hot path runs
-    * the native one-scan twin below (r15 — the GopherTextStats
-    * playbook). LangHitsSpec pins value equality. */
-  def keywordHitsRef(text: Column, word: String): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    val needle = s" $word "
-    ((length(padded) - length(regexp_replace(padded,
-      java.util.regex.Pattern.quote(needle), ""))) / needle.length).cast("long")
-  }
-
-  /** Per-language stopword-hit score — Column-algebra REFERENCE
-    * (5 lower+pad evaluations and 5 regex-replace string rebuilds per
-    * row; kept for the parity spec and as documentation of the
-    * replace-diff semantics the native twin must reproduce). */
-  def langScoreRef(text: Column, lang: String): Column =
-    LangStopwords.toMap.apply(lang)
-      .map(w => keywordHitsRef(text, w))
-      .reduce(_ + _)
-
   /** Per-language stopword-hit score: ONE lower+pad and an
     * allocation-free indexOf scan per word
     * ([[graft.functions.LangHits]] — codegen'd, value-identical to
-    * [[langScoreRef]], spec-pinned). */
+    * the replace-diff Column algebra the DuckDB oracle twins replay;
+    * LangHitsSpec pins it against that reference). */
   def langScore(text: Column, lang: String): Column =
     graft.functions.VectorFunctions.langHits(text,
       LangStopwords.toMap.apply(lang))
 
-  /** [[langId]]'s Column-algebra REFERENCE (20 regex rebuilds/row). */
-  def langIdRef(text: Column): Column = {
-    val en = langScoreRef(text, "en"); val es = langScoreRef(text, "es")
-    val de = langScoreRef(text, "de"); val fr = langScoreRef(text, "fr")
-    when(en >= es && en >= de && en >= fr, "en")
-      .when(es >= de && es >= fr, "es")
-      .when(de >= fr, "de")
-      .otherwise("fr")
-  }
-
   /** Heuristic language ID: argmax of stopword hits with a fixed
     * priority order (en > es > de > fr) for ties — native one-pass
     * form ([[graft.functions.LangIdArgmax]]; one lower+pad per ROW
-    * instead of 20 regex-replace rebuilds, value-identical to
-    * [[langIdRef]], spec-pinned). */
+    * instead of 20 regex-replace rebuilds, value-identical to the
+    * when-chain the oracle twins replay; LangHitsSpec pins it against
+    * that reference). */
   def langId(text: Column): Column =
     graft.functions.VectorFunctions.langIdArgmax(text)
 
@@ -138,23 +104,16 @@ object TextOps {
     java.lang.Long.parseLong(hex, 16)
   }
 
-  /** Word n-shingles of the whitespace tokens (n >= 1): array of
-    * space-joined n-grams, one per starting offset. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Winnowing-style set fingerprint: min over md5(shingle) — a
     * deterministic, order-free representative of the shingle set
-    * (the "rolling hash" document fingerprint at set granularity). */
-  def shingleFingerprint(text: Column, n: Int): Column = {
-    val hashes = transform(wordShingles(text, n), s => md5(s))
-    array_min(hashes)
-  }
+    * (the "rolling hash" document fingerprint at set granularity).
+    * The word n-shingles come from the native
+    * [[graft.functions.WordShingleStrings]], so the lambda only
+    * hashes; NULL when the text has fewer than `n` tokens. */
+  def shingleFingerprint(text: Column, n: Int): Column =
+    array_min(transform(
+      graft.functions.VectorFunctions.wordShingleStrings(text, n),
+      s => md5(s)))
 
   /** PII redaction patterns (RE2-safe subset — no backrefs or
     * lookarounds, so the same pattern runs in Spark's Java regex and
@@ -195,27 +154,4 @@ object TextOps {
   val RollBase = 257L
   val RollMod = 1000003L
   val RollWindow = 16
-
-  /** Character-level rolling-hash fingerprint (winnowing): the minimum
-    * over all `RollWindow`-char windows of the polynomial hash
-    * sum(code(c_j) * B^(w-1-j)) mod M. Column-algebra formulation —
-    * engine-portable; NULL for texts shorter than the window.
-    * [[graft.functions.RollingMinHash]] is the codegen'd equivalent for
-    * hot paths. */
-  def rollingFingerprint(text: Column): Column = {
-    val w = RollWindow
-    val powers = (0 until w).map(j =>
-      Seq.fill(w - 1 - j)(RollBase).foldLeft(1L)((a, b) => a * b % RollMod))
-    val n = length(text).cast("long")
-    // char code at 1-based position p (substr-based: identical
-    // semantics in any engine, no split() edge cases)
-    val codeAt = (p: Column) => ascii(text.substr(p.cast("int"), lit(1)))
-      .cast("long")
-    val windowHash = (i: Column) =>
-      (0 until w).map(j => codeAt(i + j) * powers(j) % RollMod)
-        .reduce(_ + _) % RollMod
-    when(n >= w,
-      array_min(transform(sequence(lit(1L), n - (w - 1)), i => windowHash(i))))
-      .otherwise(lit(null).cast("long"))
-  }
 }

@@ -186,9 +186,10 @@ case class SimHash64(child: Expression)
 /** Native winnowing fingerprint: minimum over all `window`-char windows
   * of the polynomial hash sum(code(c_j) * base^(w-1-j)) mod modulus.
   * True O(n) rolling evaluation (incremental add/drop per step) —
-  * semantically identical to TextOps.rollingFingerprint's O(n*w)
-  * Column-algebra form, but codegen'd and linear for hot paths.
-  * NULL for inputs shorter than the window.
+  * value-identical to the O(n*w) window sum that
+  * `text_rolling_fingerprint`'s DuckDB oracle spells out (TextOpsSpec
+  * pins it against the same sum in Column algebra), but codegen'd
+  * and linear. NULL for inputs shorter than the window.
   */
 case class RollingMinHash(child: Expression, window: Int, base: Long,
                           modulus: Long)
@@ -201,8 +202,8 @@ case class RollingMinHash(child: Expression, window: Int, base: Long,
     (1 until window).foldLeft(1L)((a, _) => a * base % modulus)
 
   override def nullSafeEval(input: Any): Any = {
-    // codepoints, not UTF-16 units — matches length()/substr()/ascii()
-    // semantics used by the Column-algebra twin and SQL oracles
+    // codepoints, not UTF-16 units — matches the length()/substr()/
+    // unicode() semantics of the SQL oracle and the spec reference
     val cps = input.toString.codePoints().toArray
     val n = cps.length
     if (n < window) null
@@ -257,42 +258,54 @@ case class RollingMinHash(child: Expression, window: Int, base: Long,
 
 /** Static helpers callable from generated code. */
 object TextHashUtil {
-  /** Distinct word-n-shingle hashes of `text` in one pass: tokenize on
-    * whitespace (space-only trim + `\s+` split — byte-identical to
-    * `split(trim(text), "\\s+")`), join every n consecutive tokens with
-    * single spaces, md5 each shingle and keep the first 15 hex digits
-    * as a long ([[graft.ext.TextOps.hex60]] semantics, value-identical
-    * to the Column-algebra form and to SQL oracles). Deduplicates via a
-    * hash set — min/equality consumers are unaffected by multiset
-    * collapse. Returns an empty array for texts with < n tokens. */
-  /** Word n-gram STRINGS (multiset — counting consumers need
-    * multiplicities, unlike the deduplicated hash form above). Same
-    * tokenization contract as [[graft.ext.TextOps.tokens]] /
-    * [[shingleHex60]]: ASCII-space-only trim, `\\s+` split. One JVM
-    * loop instead of the interpreted transform/sequence/concat_ws HOF
-    * chain, which is CodegenFallback and ~10x slower. */
-  def wordShingleStrings(s: org.apache.spark.unsafe.types.UTF8String,
-                         n: Int): ArrayData = {
-    val str = s.toString
+  /** The one tokenization contract of every word kernel here:
+    * ASCII-space-only trim, then Java `split("\\s+", -1)` —
+    * byte-identical to `split(trim(text), "\\s+")` (which is
+    * [[graft.ext.TextOps.tokens]]), including the leading/trailing
+    * empty-token edge cases. Spark/DuckDB trim() strips ASCII space
+    * ONLY (Java's trim strips all control chars — subtly different, so
+    * hand-roll it). */
+  private def tokens(str: String): Array[String] = {
     var st = 0; var en = str.length
     while (st < en && str.charAt(st) == ' ') st += 1
     while (en > st && str.charAt(en - 1) == ' ') en -= 1
-    val toks = str.substring(st, en).split("\\s+", -1)
+    str.substring(st, en).split("\\s+", -1)
+  }
+
+  /** `toks[from, until)` joined with single spaces into `sb`, which is
+    * cleared first and returned — the n-gram/chunk join every kernel
+    * shares; reusing one builder keeps the per-shingle loop free of
+    * allocations beyond the result itself. */
+  private def join(sb: java.lang.StringBuilder, toks: Array[String],
+                   from: Int, until: Int): java.lang.StringBuilder = {
+    sb.setLength(0)
+    var j = from
+    while (j < until) {
+      if (j > from) sb.append(' ')
+      sb.append(toks(j)); j += 1
+    }
+    sb
+  }
+
+  /** Word n-gram STRINGS (multiset — counting consumers need
+    * multiplicities, unlike the deduplicated hashes of
+    * [[shingleHex60]]): every n consecutive [[tokens]] joined with
+    * single spaces, one per starting offset; empty for texts with
+    * < n tokens. One JVM loop instead of the interpreted
+    * transform/sequence/concat_ws HOF chain, which is CodegenFallback
+    * and ~10x slower. */
+  def wordShingleStrings(s: org.apache.spark.unsafe.types.UTF8String,
+                         n: Int): ArrayData = {
+    val toks = tokens(s.toString)
     if (toks.length < n)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.empty[AnyRef])
     val out = new Array[AnyRef](toks.length - n + 1)
     val sb = new java.lang.StringBuilder
     var i = 0
-    while (i <= toks.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j)); j += 1
-      }
+    while (i < out.length) {
       out(i) = org.apache.spark.unsafe.types.UTF8String
-        .fromString(sb.toString)
+        .fromString(join(sb, toks, i, i + n).toString)
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -303,25 +316,13 @@ object TextHashUtil {
     * and drops tails). Same tokenization contract. */
   def wordChunks(s: org.apache.spark.unsafe.types.UTF8String,
                  n: Int): ArrayData = {
-    val str = s.toString
-    var st = 0; var en = str.length
-    while (st < en && str.charAt(st) == ' ') st += 1
-    while (en > st && str.charAt(en - 1) == ' ') en -= 1
-    val toks = str.substring(st, en).split("\\s+", -1)
-    val nChunks = (toks.length + n - 1) / n
-    val out = new Array[AnyRef](nChunks)
+    val toks = tokens(s.toString)
+    val out = new Array[AnyRef]((toks.length + n - 1) / n)
     val sb = new java.lang.StringBuilder
     var k = 0
-    while (k < nChunks) {
-      sb.setLength(0)
-      var j = k * n
-      val lim = math.min(j + n, toks.length)
-      while (j < lim) {
-        if (j > k * n) sb.append(' ')
-        sb.append(toks(j)); j += 1
-      }
-      out(k) = org.apache.spark.unsafe.types.UTF8String
-        .fromString(sb.toString)
+    while (k < out.length) {
+      out(k) = org.apache.spark.unsafe.types.UTF8String.fromString(
+        join(sb, toks, k * n, math.min(k * n + n, toks.length)).toString)
       k += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -337,40 +338,31 @@ object TextHashUtil {
     * degrades to [[wordChunks]]. Same tokenization contract. */
   def wordChunksStrided(s: org.apache.spark.unsafe.types.UTF8String,
                         n: Int, stride: Int): ArrayData = {
-    val str = s.toString
-    var st = 0; var en = str.length
-    while (st < en && str.charAt(st) == ' ') st += 1
-    while (en > st && str.charAt(en - 1) == ' ') en -= 1
-    val toks = str.substring(st, en).split("\\s+", -1)
+    val toks = tokens(s.toString)
     val nChunks =
       if (toks.length <= n) 1 else 1 + (toks.length - n + stride - 1) / stride
     val out = new Array[AnyRef](nChunks)
     val sb = new java.lang.StringBuilder
     var k = 0
     while (k < nChunks) {
-      sb.setLength(0)
-      var j = k * stride
-      val lim = math.min(j + n, toks.length)
-      while (j < lim) {
-        if (j > k * stride) sb.append(' ')
-        sb.append(toks(j)); j += 1
-      }
-      out(k) = org.apache.spark.unsafe.types.UTF8String
-        .fromString(sb.toString)
+      out(k) = org.apache.spark.unsafe.types.UTF8String.fromString(
+        join(sb, toks, k * stride,
+          math.min(k * stride + n, toks.length)).toString)
       k += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  /** Distinct word-n-shingle hashes of `text` in one pass: the
+    * [[wordShingleStrings]] n-grams, md5 each shingle and keep the
+    * first 15 hex digits as a long ([[graft.ext.TextOps.hex60]]
+    * semantics, value-identical to the Column-algebra form and to SQL
+    * oracles). Deduplicates via a hash set — min/equality consumers
+    * are unaffected by multiset collapse. Returns an empty array for
+    * texts with < n tokens. */
   def shingleHex60(s: org.apache.spark.unsafe.types.UTF8String,
                    n: Int): ArrayData = {
-    val str = s.toString
-    // Spark/DuckDB trim() strips ASCII space ONLY (Java's trim strips
-    // all control chars — subtly different, so hand-roll it)
-    var st = 0; var en = str.length
-    while (st < en && str.charAt(st) == ' ') st += 1
-    while (en > st && str.charAt(en - 1) == ' ') en -= 1
-    val toks = str.substring(st, en).split("\\s+", -1)
+    val toks = tokens(s.toString)
     if (toks.length < n)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.emptyLongArray)
@@ -379,15 +371,9 @@ object TextHashUtil {
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i <= toks.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j)); j += 1
-      }
       md.reset()
-      val d = md.digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val d = md.digest(join(sb, toks, i, i + n).toString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // first 15 hex chars = bytes 0-6 plus the high nibble of byte 7
       var h = 0L
       var b = 0
@@ -423,7 +409,7 @@ object TextHashUtil {
     * LOWERED text, summed over `words` — value-identical to the
     * replace-diff Column algebra it replaces
     * (`(length(padded) - length(regexp_replace(padded, quoted, '')))
-    * / needle_len`, the [[graft.ext.TextOps.keywordHitsRef]] reference):
+    * / needle_len`, the `keywordHitsRef` spec reference):
     * regex literal replace scans left-to-right and resumes AFTER each
     * match, which indexOf-advance-by-needle-length replicates
     * exactly (overlapping candidates like " a a " count once on
@@ -436,8 +422,11 @@ object TextHashUtil {
     * regex-replace STRING REBUILD per word (5 rebuilds per langScore,
     * 20 per langId). */
   def langHits(s: org.apache.spark.unsafe.types.UTF8String,
-               words: Array[String]): Long = {
-    val padded = " " + s.toLowerCase.toString + " "
+               words: Array[String]): Long =
+    hits(" " + s.toLowerCase.toString + " ", words)
+
+  /** [[langHits]] over an already lowered and padded text. */
+  private def hits(padded: String, words: Array[String]): Long = {
     var total = 0L
     var w = 0
     while (w < words.length) {
@@ -459,25 +448,7 @@ object TextHashUtil {
   def langIdArgmax(s: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.unsafe.types.UTF8String = {
     val padded = " " + s.toLowerCase.toString + " "
-    val scores = new Array[Long](LangStopwordLists.length)
-    var l = 0
-    while (l < LangStopwordLists.length) {
-      val words = LangStopwordLists(l)._2
-      var total = 0L
-      var w = 0
-      while (w < words.length) {
-        val needle = " " + words(w) + " "
-        var idx = padded.indexOf(needle)
-        while (idx >= 0) {
-          total += 1
-          idx = padded.indexOf(needle, idx + needle.length)
-        }
-        w += 1
-      }
-      scores(l) = total
-      l += 1
-    }
-    val Array(en, es, de, fr) = scores
+    val Array(en, es, de, fr) = LangStopwordLists.map(l => hits(padded, l._2))
     val lang =
       if (en >= es && en >= de && en >= fr) "en"
       else if (es >= de && es >= fr) "es"
@@ -491,9 +462,7 @@ object TextHashUtil {
     * formulation it replaces (equality is spec-pinned against the HOF
     * reference on adversarial fixtures):
     *
-    *  - tokens: ASCII-space-only trim + Java `split("\\s+", -1)` —
-    *    byte-identical to `split(trim(text), "\\s+")` incl. the
-    *    leading/trailing-empty-token edge cases
+    *  - tokens: the [[tokens]] contract
     *  - `sum_word_len` counts Unicode CODE POINTS per token (SQL
     *    `length()` semantics), not UTF-16 units
     *  - `n_ellipsis` counts non-overlapping left-to-right '...'
@@ -511,10 +480,7 @@ object TextHashUtil {
   def gopherStats(s: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.sql.catalyst.InternalRow = {
     val str = s.toString
-    var st = 0; var en = str.length
-    while (st < en && str.charAt(st) == ' ') st += 1
-    while (en > st && str.charAt(en - 1) == ' ') en -= 1
-    val toks = str.substring(st, en).split("\\s+", -1)
+    val toks = tokens(str)
     var sumLen = 0L; var nAlpha = 0L
     val stopSeen = new Array[Boolean](GopherStop8.length)
     var i = 0
@@ -572,33 +538,37 @@ object TextHashUtil {
   }
 }
 
-/** Distinct word-n-shingle hex60 hashes in one codegen'd pass —
-  * value-identical to
-  * `transform(array_distinct(wordShingles(text, n)), s => hex60(s))`
-  * but ~10x faster: the Column-algebra form runs four nested
-  * interpreted higher-order functions per row (CodegenFallback), this
-  * is one tight JVM loop (asserted equal in specs).
-  */
-/** Word n-gram strings as a native codegen'd expression — the
-  * string-valued sibling of [[ShingleHex60]] (multiset, no dedup). */
-case class WordShingleStrings(child: Expression, n: Int)
+/** A native string kernel: one static [[TextHashUtil]] call per
+  * non-null row, the same call in interpreted and generated code.
+  * `call` names the method and `args` its trailing constant
+  * arguments, spliced into the generated source as literals. */
+private[functions] abstract class TextKernel
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with ExpectsInputTypes {
+  protected def call: String
+  protected def args: Seq[Any] = Nil
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String): Any
 
   override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
 
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
   override def nullSafeEval(input: Any): Any =
-    TextHashUtil.wordShingleStrings(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
+    eval(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = graft.functions.TextHashUtil.wordShingleStrings($str, $n);")
+      s"${ev.value} = graft.functions.TextHashUtil.$call(" +
+        (str +: args.map(_.toString)).mkString(", ") + ");")
+}
 
+/** Word n-gram strings as a native codegen'd expression — the
+  * string-valued sibling of [[ShingleHex60]] (multiset, no dedup); see
+  * [[TextHashUtil.wordShingleStrings]]. */
+case class WordShingleStrings(child: Expression, n: Int) extends TextKernel {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  protected def call = "wordShingleStrings"
+  override protected def args = Seq(n)
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.wordShingleStrings(s, n)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -611,49 +581,30 @@ case class WordShingleStrings(child: Expression, n: Int)
   * whole-stage codegen, and the quality-filter family
   * (gopher filter, ensemble, calibration) sits on the corpus hot
   * path at 100 TB. */
-case class GopherTextStats(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-
-
+case class GopherTextStats(child: Expression) extends TextKernel {
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
       "n_words", "sum_word_len", "n_alpha_words", "n_hash", "n_ellipsis",
       "n_lines", "n_bullet_lines", "n_ellipsis_lines", "stop_hits")
       .map(f => org.apache.spark.sql.types.StructField(
         f, org.apache.spark.sql.types.LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashUtil.gopherStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = graft.functions.TextHashUtil.gopherStats($str);")
-
+  protected def call = "gopherStats"
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.gopherStats(s)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** Summed stopword-occurrence count for one language's word list as a
-  * native codegen'd expression — see [[TextHashUtil.langHits]]. */
-case class LangHits(child: Expression, words: Seq[String])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-
-
+  * native codegen'd expression — see [[TextHashUtil.langHits]]. The
+  * word array is a reference object, not a literal argument. */
+case class LangHits(child: Expression, words: Seq[String]) extends TextKernel {
   private lazy val wordsArr: Array[String] = words.toArray
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashUtil.langHits(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      wordsArr)
+  protected def call = "langHits"
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.langHits(s, wordsArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("langWords", wordsArr,
@@ -668,47 +619,23 @@ case class LangHits(child: Expression, words: Seq[String])
 
 /** Language-ID argmax as a native codegen'd expression — see
   * [[TextHashUtil.langIdArgmax]]. */
-case class LangIdArgmax(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-
-
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashUtil.langIdArgmax(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = graft.functions.TextHashUtil.langIdArgmax($str);")
-
+case class LangIdArgmax(child: Expression) extends TextKernel {
+  override def dataType: DataType = StringType
+  protected def call = "langIdArgmax"
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.langIdArgmax(s)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 /** Non-overlapping word chunks as a native codegen'd expression —
   * see [[TextHashUtil.wordChunks]]. */
-case class WordChunks(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashUtil.wordChunks(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = graft.functions.TextHashUtil.wordChunks($str, $n);")
-
+case class WordChunks(child: Expression, n: Int) extends TextKernel {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  protected def call = "wordChunks"
+  override protected def args = Seq(n)
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.wordChunks(s, n)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -716,45 +643,30 @@ case class WordChunks(child: Expression, n: Int)
 /** Overlapping (strided) word chunks as a native codegen'd
   * expression — see [[TextHashUtil.wordChunksStrided]]. */
 case class WordChunksStrided(child: Expression, n: Int, stride: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashUtil.wordChunksStrided(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = graft.functions.TextHashUtil.wordChunksStrided($str, $n, $stride);")
-
+    extends TextKernel {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  protected def call = "wordChunksStrided"
+  override protected def args = Seq(n, stride)
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.wordChunksStrided(s, n, stride)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class ShingleHex60(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-
-
+/** Distinct word-n-shingle hex60 hashes in one codegen'd pass —
+  * value-identical to `hex60` over the distinct word n-shingles, as
+  * the specs' Column-algebra reference computes them, but ~10x
+  * faster: that form runs four nested interpreted higher-order
+  * functions per row (CodegenFallback), this is one tight JVM loop
+  * (asserted equal in specs); see [[TextHashUtil.shingleHex60]].
+  */
+case class ShingleHex60(child: Expression, n: Int) extends TextKernel {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashUtil.shingleHex60(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str =>
-      s"${ev.value} = graft.functions.TextHashUtil.shingleHex60($str, $n);")
-
+  protected def call = "shingleHex60"
+  override protected def args = Seq(n)
+  protected def eval(s: org.apache.spark.unsafe.types.UTF8String) =
+    TextHashUtil.shingleHex60(s, n)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

@@ -587,14 +587,15 @@ object ExtQueriesAnalytics {
         .agg(Windows.stableSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
           .as("revenue"), count(lit(1)).as("n_items"))),
     // exact interpolated percentiles (probed bit-identical to DuckDB's
-    // quantile_cont)
+    // quantile_cont); one array-valued percentile buffers each group's
+    // values once for all four cuts, where four scalar ones buffered
+    // them four times
     "analytics_percentiles" -> ((s, dir) =>
       t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-        .agg(
-          expr("percentile(l_extendedprice, 0.25)").as("p25"),
-          expr("percentile(l_extendedprice, 0.5)").as("p50"),
-          expr("percentile(l_extendedprice, 0.75)").as("p75"),
-          expr("percentile(l_extendedprice, 0.99)").as("p99"))),
+        .agg(expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.99))")
+          .as("ps"))
+        .select(col("l_returnflag") +: Seq("p25", "p50", "p75", "p99")
+          .zipWithIndex.map { case (p, i) => col("ps")(i).as(p) }: _*)),
     // incremental watermark load (the strategy the reference's metadata
     // reserves): initial batch to a cutoff, then append past the high
     // watermark; the final table must equal the full source

@@ -46,12 +46,15 @@ object ExtQueriesText {
     "text_repetition" -> ((s, dir) =>
       TextOps.repetitionStats(t(s, dir, "documents"), col("doc_id"),
         col("text"))),
-    // true rolling-hash (winnowing) fingerprint over character windows;
-    // the native codegen'd RollingMinHash computes the identical value
-    // in O(n) (asserted equal in specs)
+    // true rolling-hash (winnowing) fingerprint over character windows,
+    // in O(n) per document by the native RollingMinHash; the oracle SQL
+    // spells out the same O(n*w) window sum, and TextOpsSpec pins the
+    // native value against a Column-algebra reference
     "text_rolling_fingerprint" -> ((s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
-        TextOps.rollingFingerprint(col("text")).as("roll_min"))),
+        graft.functions.VectorFunctions.rollingMinHash(col("text"),
+          TextOps.RollWindow, TextOps.RollBase, TextOps.RollMod)
+          .as("roll_min"))),
     // integer-exact TF-IDF: idf as (n*1e6) div df — the monotone
     // integer proxy for ln(n/df); libm's ln is NOT guaranteed
     // bit-identical across engines, integer division is. Top-3 terms

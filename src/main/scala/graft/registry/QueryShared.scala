@@ -358,8 +358,8 @@ object QueryShared {
     s"CAST('0x' || substr(md5($s), 1, 15) AS BIGINT)"
 
   /** Distinct (doc_id, shingle) pairs over 3-word shingles — DuckDB
-    * twin of TextOps.wordShingles + array_distinct + explode (range of
-    * a negative bound is empty, covering the <3-token case). */
+    * twin of [[graft.ext.Corpus.shinglePairs]] (range of a negative
+    * bound is empty, covering the <3-token case). */
   private[registry] val ShinglesCte =
     """tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
       |         FROM documents),

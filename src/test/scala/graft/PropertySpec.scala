@@ -127,7 +127,7 @@ class PropertySpec extends SparkSpec {
         graft.functions.VectorFunctions.shingleHex60(col("text"), 3).as("hs"))
       .as[(Long, Seq[Long])].collect().toMap.view.mapValues(_.toSet).toMap
     val algebra = df.select(col("doc_id"),
-        transform(array_distinct(graft.ext.TextOps.wordShingles(col("text"), 3)),
+        transform(array_distinct(TextRefs.wordShingles(col("text"), 3)),
           s => graft.ext.TextOps.hex60(s)).as("hs"))
       .as[(Long, Seq[Long])].collect().toMap.view.mapValues(_.toSet).toMap
     assert(native == algebra)

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 
 class CorpusSpec extends SparkSpec {
   import spark.implicits._
@@ -631,7 +631,7 @@ class CorpusSpec extends SparkSpec {
     val native = docs.select(col("doc_id"),
       graft.functions.VectorFunctions.wordChunks(col("text"), 8).as("c"))
     val hof = docs.select(col("doc_id"),
-      Corpus.chunkedHof(col("text"), 8).as("c"))
+      TextRefs.chunkedHof(col("text"), 8).as("c"))
     assert(native.orderBy("doc_id").collect()
       .sameElements(hof.orderBy("doc_id").collect()))
     // riskiest corners: empty, all-space, tab/newline whitespace (trim
@@ -642,7 +642,7 @@ class CorpusSpec extends SparkSpec {
     val ne = edge.select(
       graft.functions.VectorFunctions.wordChunks(col("text"), 2).as("c"))
       .collect().map(_.getSeq[String](0))
-    val he = edge.select(Corpus.chunkedHof(col("text"), 2).as("c"))
+    val he = edge.select(TextRefs.chunkedHof(col("text"), 2).as("c"))
       .collect().map(_.getSeq[String](0))
     assert(ne.zip(he).forall { case (a, b) => a == b },
       s"edge mismatch: ${ne.toSeq} vs ${he.toSeq}")
@@ -653,7 +653,7 @@ class CorpusSpec extends SparkSpec {
       graft.functions.VectorFunctions.wordChunksStrided(col("text"), 8, 5)
         .as("c"))
     val hof = docs.select(col("doc_id"),
-      Corpus.chunkedOverlapHof(col("text"), 8, 5).as("c"))
+      TextRefs.chunkedOverlapHof(col("text"), 8, 5).as("c"))
     assert(native.orderBy("doc_id").collect()
       .sameElements(hof.orderBy("doc_id").collect()))
     // same riskiest corners as the non-overlapping chunker, plus the
@@ -663,7 +663,7 @@ class CorpusSpec extends SparkSpec {
     val ne = edge.select(
       graft.functions.VectorFunctions.wordChunksStrided(col("text"), 4, 3)
         .as("c")).collect().map(_.getSeq[String](0))
-    val he = edge.select(Corpus.chunkedOverlapHof(col("text"), 4, 3).as("c"))
+    val he = edge.select(TextRefs.chunkedOverlapHof(col("text"), 4, 3).as("c"))
       .collect().map(_.getSeq[String](0))
     assert(ne.zip(he).forall { case (a, b) => a == b },
       s"edge mismatch: ${ne.toSeq} vs ${he.toSeq}")
@@ -674,7 +674,7 @@ class CorpusSpec extends SparkSpec {
       graft.functions.VectorFunctions.wordShingleStrings(col("text"), 2)
         .as("sh"))
     val hof = docs.select(col("doc_id"),
-      TextOps.wordShingles(col("text"), 2).as("sh"))
+      TextRefs.wordShingles(col("text"), 2).as("sh"))
     assert(native.orderBy("doc_id").collect()
       .sameElements(hof.orderBy("doc_id").collect()))
     // edge cases: fewer tokens than n, surrounding spaces, all-space,
@@ -684,7 +684,7 @@ class CorpusSpec extends SparkSpec {
     val ne = edge.select(
       graft.functions.VectorFunctions.wordShingleStrings(col("text"), 2)
         .as("sh")).collect().map(_.getSeq[String](0))
-    val he = edge.select(TextOps.wordShingles(col("text"), 2).as("sh"))
+    val he = edge.select(TextRefs.wordShingles(col("text"), 2).as("sh"))
       .collect().map(_.getSeq[String](0))
     assert(ne.zip(he).forall { case (a, b) => a == b },
       s"edge mismatch: ${ne.toSeq} vs ${he.toSeq}")

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -27,7 +27,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val subset = docs.filter(col("doc_id") < 120)
     // exact jaccard on 3-shingle sets via the same tokenization
     val sh = subset.select(col("doc_id"),
-      explode(array_distinct(TextOps.wordShingles(col("text"), 3)))
+      explode(array_distinct(TextRefs.wordShingles(col("text"), 3)))
         .as("shingle"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.as("a").join(sh.as("b"),
@@ -58,7 +58,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("shingleJaccardPairs equals the HOF-computed exact shingle-set jaccard") {
     val subset = docs.filter(col("doc_id") < 200)
     val sh = subset.select(col("doc_id"),
-      explode(array_distinct(TextOps.wordShingles(col("text"), 3)))
+      explode(array_distinct(TextRefs.wordShingles(col("text"), 3)))
         .as("shingle"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.as("a").join(sh.as("b"),
@@ -299,7 +299,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(Long, Long)].collect().groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
     val algebra = docs.select(col("doc_id"),
-        explode(array_distinct(TextOps.wordShingles(col("text"), 3)))
+        explode(array_distinct(TextRefs.wordShingles(col("text"), 3)))
           .as("shingle"))
       .select(col("doc_id"), TextOps.hex60(col("shingle")).as("h"))
       .as[(Long, Long)].collect().groupBy(_._1)
@@ -313,7 +313,7 @@ class DedupSimilaritySpec extends SparkSpec {
         graft.functions.VectorFunctions.shingleHex60(col("text"), 3).as("hs"))
       .as[(Long, Seq[Long])].collect().toMap
     val alg = edge.select(col("doc_id"),
-        transform(array_distinct(TextOps.wordShingles(col("text"), 3)),
+        transform(array_distinct(TextRefs.wordShingles(col("text"), 3)),
           s => TextOps.hex60(s)).as("hs"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(nat.view.mapValues(_.toSet).toMap == alg.view.mapValues(_.toSet).toMap)

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 
 /** DSIR importance weights and the corpus novelty curve. */
 class DsirNoveltySpec extends SparkSpec {
@@ -59,7 +59,7 @@ class DsirNoveltySpec extends SparkSpec {
     val out = Corpus.noveltyCurve(docs, col("doc_id"), col("text"))
     val novel = out.agg(sum("n_novel")).as[Long].head()
     val distinctShingles = docs.select(explode(
-        TextOps.wordShingles(col("text"), 3)).as("s"))
+        TextRefs.wordShingles(col("text"), 3)).as("s"))
       .select("s").distinct().count()
     assert(novel === distinctShingles,
       "each distinct shingle is novel exactly once, in its first doc")

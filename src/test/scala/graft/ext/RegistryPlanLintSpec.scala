@@ -16,6 +16,27 @@ import graft.SparkSpec
   */
 class RegistryPlanLintSpec extends SparkSpec {
 
+  /** Every ExtQueries query constructed once at sf0.001, by name —
+    * each lint below reads its plans from here instead of building the
+    * whole registry again. */
+  private lazy val planned
+      : Seq[(String, Either[Throwable, org.apache.spark.sql.execution.QueryExecution])] =
+    graft.registry.ExtQueries.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try Right(fn(spark, sf0001).queryExecution)
+               catch { case NonFatal(e) => Left(e) })
+    }
+
+  /** Runs `check` over every planned query, collecting its offences;
+    * a query that failed to construct or plan is an offence itself. */
+  private def lint(check: (String, org.apache.spark.sql.execution.QueryExecution)
+      => Seq[String]): Seq[String] =
+    planned.flatMap {
+      case (name, Right(qe)) =>
+        try check(name, qe)
+        catch { case NonFatal(e) => Seq(s"$name failed to plan: ${e.getClass.getSimpleName}") }
+      case (name, Left(e)) => Seq(s"$name failed to plan: ${e.getClass.getSimpleName}")
+    }
+
   /** Queries whose BroadcastNestedLoopJoin sides are metadata-sized
     * by construction — 1-row stats frames (sketch_quantile_error),
     * the <=10-vector query set and centroid tables of the ANN family
@@ -132,19 +153,14 @@ class RegistryPlanLintSpec extends SparkSpec {
     "sink_compaction_plan", "vocab_coverage_report")
 
   test("unpartitioned windows only on the pinned metadata-sized allowlist") {
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((name, fn) <- graft.registry.ExtQueries.queries.toSeq.sortBy(_._1)) {
-      try {
-        val global = fn(spark, sf0001).queryExecution.optimizedPlan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-              if w.partitionSpec.isEmpty => w
-        }
-        if (global.nonEmpty && !GlobalWindowAllowed.contains(name))
-          offenders += s"$name plans ${global.size} unallowlisted global window(s)"
-      } catch {
-        case NonFatal(e) =>
-          offenders += s"$name failed to plan: ${e.getClass.getSimpleName}"
+    val offenders = lint { (name, qe) =>
+      val global = qe.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w
       }
+      if (global.nonEmpty && !GlobalWindowAllowed.contains(name))
+        Seq(s"$name plans ${global.size} unallowlisted global window(s)")
+      else Nil
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
@@ -179,41 +195,75 @@ class RegistryPlanLintSpec extends SparkSpec {
     "quality_ks_drift_report" -> 4)
 
   test("quality_score computes in Projects only, at the pinned per-consumer counts") {
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((name, fn) <- graft.registry.ExtQueries.queries.toSeq.sortBy(_._1)) {
-      try {
-        val lines = fn(spark, sf0001).queryExecution.optimizedPlan
-          .toString.linesIterator.filter(_.contains(ScoreMarker)).toSeq
-        val inFilter = lines.filter(_.contains("Filter "))
-        if (inFilter.nonEmpty)
-          offenders += s"$name inlines quality_score into a Filter " +
-            s"(the 1.41x double-eval regression): ${inFilter.head.take(120)}"
-        val expected = ScoreMarkerCounts.getOrElse(name, 0)
-        if (lines.size != expected)
-          offenders += s"$name score-marker count ${lines.size} != pinned $expected"
-      } catch {
-        case NonFatal(e) =>
-          offenders += s"$name failed to plan: ${e.getClass.getSimpleName}"
-      }
+    val offenders = lint { (name, qe) =>
+      val lines = qe.optimizedPlan
+        .toString.linesIterator.filter(_.contains(ScoreMarker)).toSeq
+      val inFilter = lines.filter(_.contains("Filter "))
+      val expected = ScoreMarkerCounts.getOrElse(name, 0)
+      (if (inFilter.nonEmpty)
+        Seq(s"$name inlines quality_score into a Filter " +
+          s"(the 1.41x double-eval regression): ${inFilter.head.take(120)}")
+      else Nil) ++
+      (if (lines.size != expected)
+        Seq(s"$name score-marker count ${lines.size} != pinned $expected")
+      else Nil)
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("no registry query plans a cartesian; BNLJ only on the pinned allowlist") {
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((name, fn) <- graft.registry.ExtQueries.queries.toSeq.sortBy(_._1)) {
-      try {
-        val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct"))
-          offenders += s"$name plans a CartesianProduct"
-        if (plan.contains("BroadcastNestedLoopJoin") &&
-            !BnljAllowed.contains(name))
-          offenders += s"$name plans an unallowlisted BroadcastNestedLoopJoin"
-      } catch {
-        case NonFatal(e) =>
-          offenders += s"$name failed to plan: ${e.getClass.getSimpleName}"
-      }
+    val offenders = lint { (name, qe) =>
+      val plan = qe.executedPlan.toString
+      (if (plan.contains("CartesianProduct"))
+        Seq(s"$name plans a CartesianProduct") else Nil) ++
+      (if (plan.contains("BroadcastNestedLoopJoin") &&
+          !BnljAllowed.contains(name))
+        Seq(s"$name plans an unallowlisted BroadcastNestedLoopJoin")
+      else Nil)
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  /** Queries whose higher-order lambdas keep a lambda-invariant
+    * subtree (`PlanLint.invariantLambdaSubtrees`), pinned exactly with
+    * the reason each is kept. Every other query must compute nothing
+    * per element that does not depend on the element. */
+  private val InvariantLambdaAllowed: Map[String, String] = Map(
+    "sketch_bloom_fpr_report" ->
+      "k <= 3 int-to-string casts of the key per row, one per hash position")
+
+  test("no lambda recomputes an invariant subtree outside the pinned allowlist") {
+    val offenders = lint { (name, qe) =>
+      val inv = graft.tools.PlanLint.invariantLambdaSubtrees(qe.optimizedPlan)
+      if (inv.nonEmpty && !InvariantLambdaAllowed.contains(name))
+        Seq(s"$name recomputes ${inv.size} lambda-invariant subtree(s) per " +
+          s"element: ${inv.map(_.sql.take(100)).mkString(" | ")}")
+      else if (inv.isEmpty && InvariantLambdaAllowed.contains(name))
+        Seq(s"$name is allowlisted but has no lambda-invariant subtree")
+      else Nil
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the invariant-lambda lint flags a per-shingle re-split, not the native shingler") {
+    import org.apache.spark.sql.functions._
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    def found(c: org.apache.spark.sql.Column) =
+      graft.tools.PlanLint.invariantLambdaSubtrees(
+        docs.select(c).queryExecution.optimizedPlan)
+    // the Column-algebra shingler splits the text inside its lambda
+    val resplit = found(transform(graft.TextRefs.wordShingles(col("text"), 3),
+      s => md5(s)))
+    assert(resplit.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.StringSplit]),
+      resplit.map(_.sql).mkString(" | "))
+    assert(found(graft.ext.TextOps.shingleFingerprint(col("text"), 3)).isEmpty)
+    // a subtree over an enclosing lambda's variable is invariant for
+    // the inner lambda; one over the inner variable is not
+    val nested = found(transform(split(col("text"), " "),
+      x => transform(array(lit("a")), y => concat(upper(x), lower(y)))))
+    assert(nested.size == 1 && nested.head.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.Upper],
+      nested.map(_.sql).mkString(" | "))
   }
 }

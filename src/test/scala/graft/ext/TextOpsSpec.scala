@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 
 class TextOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +37,8 @@ class TextOpsSpec extends SparkSpec {
 
   test("word shingles: inclusive offsets, empty when too short") {
     val got = Seq("a b c d", "a b").toDF("t")
-      .select(TextOps.wordShingles(col("t"), 3)).as[Seq[String]].collect()
+      .select(graft.functions.VectorFunctions.wordShingleStrings(col("t"), 3))
+      .as[Seq[String]].collect()
     assert(got(0) == Seq("a b c", "b c d"))
     assert(got(1).isEmpty)
   }
@@ -56,7 +57,7 @@ class TextOpsSpec extends SparkSpec {
   test("native RollingMinHash equals the Column-algebra rolling fingerprint") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val both = docs.select(
-      TextOps.rollingFingerprint(col("text")).as("algebra"),
+      TextRefs.rollingFingerprint(col("text")).as("algebra"),
       graft.functions.VectorFunctions.rollingMinHash(col("text"),
         TextOps.RollWindow, TextOps.RollBase, TextOps.RollMod).as("native"))
       .as[(Option[Long], Option[Long])].collect()

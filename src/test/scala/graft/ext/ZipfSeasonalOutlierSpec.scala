@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 
 /** The three r14 report operators against driver-side replays:
   * fixed-point-log2 Zipf fit, hour-of-day seasonal profile, and
@@ -68,7 +68,7 @@ class ZipfSeasonalOutlierSpec extends SparkSpec {
       .as[(Long, Long, Long)].head()
     // replay off the same (doc, shingle)-distinct pairs
     val pairs = docs.select(col("doc_id"),
-        explode(TextOps.wordShingles(col("text"), 3)).as("sh"))
+        explode(TextRefs.wordShingles(col("text"), 3)).as("sh"))
       .distinct().as[(Long, String)].collect()
     def oct(d: Long): Long = 64 - java.lang.Long.numberOfLeadingZeros(d + 1)
     val occ = pairs.groupBy(p => oct(p._1)).view.mapValues(_.size.toLong).toMap

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 
 class GraftFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -75,7 +75,7 @@ class GraftFunctionsSpec extends SparkSpec {
       "SELECT graft_rolling_minhash('abcdefghijklmnopq', 16) AS r")
       .as[Long].head()
     val rollApi = Seq(("abcdefghijklmnopq")).toDF("t")
-      .select(graft.ext.TextOps.rollingFingerprint(col("t")))
+      .select(TextRefs.rollingFingerprint(col("t")))
       .as[Long].head()
     assert(roll == rollApi)
   }

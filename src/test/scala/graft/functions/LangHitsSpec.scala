@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TextRefs}
 import graft.ext.TextOps
 
 /** The native one-scan language stopword expressions (LangHits,
@@ -36,7 +36,7 @@ class LangHitsSpec extends SparkSpec {
     for (df <- Seq(fx, corpus); lang <- TextOps.LangStopwords.map(_._1)) {
       val bad = df.select(col("t"),
           TextOps.langScore(col("t"), lang).as("native"),
-          TextOps.langScoreRef(col("t"), lang).as("ref"))
+          TextRefs.langScoreRef(col("t"), lang).as("ref"))
         .filter(col("native") =!= col("ref"))
       assert(bad.isEmpty,
         s"$lang diverges: ${bad.take(3).mkString("; ")}")
@@ -50,7 +50,7 @@ class LangHitsSpec extends SparkSpec {
     for (df <- Seq(fx, corpus)) {
       val bad = df.select(col("t"),
           TextOps.langId(col("t")).as("native"),
-          TextOps.langIdRef(col("t")).as("ref"))
+          TextRefs.langIdRef(col("t")).as("ref"))
         .filter(col("native") =!= col("ref"))
       assert(bad.isEmpty,
         s"langId diverges: ${bad.take(3).mkString("; ")}")
